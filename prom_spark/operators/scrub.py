@@ -219,18 +219,27 @@ def strip_boilerplate(
         F.col(id_col).alias("_id"),
         F.posexplode(F.split(F.col(text_col), r"\n")).alias("_pos", "_line"),
     )
-    kept = lines.join(
+    # boilerplate lines are marked by a broadcast left join and skipped
+    # by the aggregate (collect_list drops nulls), not removed before it:
+    # a document whose every line is boilerplate keeps its group and
+    # comes out with empty text instead of vanishing
+    marked = lines.join(
         F.broadcast(bp),
         on=(lines["_g"] == bp["_g"]) & (F.trim(lines["_line"]) == bp["_bp_line"]),
-        how="left_anti",
+        how="left",
     )
     return (
-        kept.groupBy("_id")
+        marked.groupBy("_id")
         .agg(
             F.array_join(
                 F.transform(
                     F.array_sort(
-                        F.collect_list(F.struct(F.col("_pos"), F.col("_line")))
+                        F.collect_list(
+                            F.when(
+                                F.col("_bp_line").isNull(),
+                                F.struct(F.col("_pos"), F.col("_line")),
+                            )
+                        )
                     ),
                     lambda s: s["_line"],
                 ),

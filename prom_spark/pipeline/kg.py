@@ -10,8 +10,9 @@ Stages (each a checkpointed table via sinks.StageStore; resumable):
                 best-per-mention selection
   triples_raw   predicate extraction per turn (pattern join over token
                 positions) + cross-turn `follows` via turn-ordered window
-  entity_map    canonicalization: alias-overlap edges -> connected
-                components -> entity_id -> canonical_id
+  entity_map    canonicalization: alias-overlap clusters ->
+                entity_id -> canonical_id (one driver pass for a
+                broadcast-sized dictionary, connected components beyond)
   triples       canonical (subj, pred, obj, conv_id, turn_idx), bucketed
                 by hash(conv_id), sorted within partitions by
                 (conv_id, turn_idx)
@@ -674,10 +675,80 @@ def extract_triples(
     ).select("conv_id", "turn_idx", *carry, "t.subj", "t.pred", "t.obj")
 
 
-def canonicalize_entities(dictionary: DataFrame) -> DataFrame:
+def _min_label_components(alias_codes, entity_codes, n_entities: int):
+    """Component label per entity code: the smallest entity code sharing
+    an alias chain with it. Vectorized min-label propagation to a
+    fixpoint — min over each alias's entities, min back over each
+    entity's aliases, then pointer jumping (label of the label) — so
+    the round count tracks the log of the chain length, not its rows."""
+    import numpy as np
+
+    label = np.arange(n_entities)
+    if len(alias_codes) == 0:
+        return label
+    n_alias = int(alias_codes.max()) + 1
+    while True:
+        per_alias = np.full(n_alias, n_entities)
+        np.minimum.at(per_alias, alias_codes, label[entity_codes])
+        nxt = label.copy()
+        np.minimum.at(nxt, entity_codes, per_alias[alias_codes])
+        jumped = nxt[nxt]
+        while not np.array_equal(jumped, nxt):
+            nxt, jumped = jumped, jumped[jumped]
+        if np.array_equal(nxt, label):
+            return label
+        label = nxt
+
+
+def _entity_map_local(dictionary: DataFrame) -> DataFrame:
+    """Driver-side entity map for a broadcast-sized dictionary: one
+    collect, numpy label propagation, an Arrow-backed one-partition
+    local frame. Same relation as the connected-components path,
+    including its (null, null) row for a null entity_id."""
+    import pandas as pd
+
+    pdf = dictionary.select(
+        F.col("alias").cast("string"), F.col("entity_id").cast("string")
+    ).toPandas()
+    # sorted factorization: the smallest code is the smallest id, so a
+    # component's min label IS its canonical id; nulls code to -1
+    ent, ids = pd.factorize(pdf["entity_id"], sort=True)
+    alias, _ = pd.factorize(pdf["alias"])
+    edge = (ent >= 0) & (alias >= 0)
+    label = _min_label_components(alias[edge], ent[edge], len(ids))
+    out = pd.DataFrame({"entity_id": ids, "canonical_id": ids[label]})
+    if (ent < 0).any():
+        out.loc[len(out)] = [None, None]
+    spark = dictionary.sparkSession
+    # pandas -> Arrow batches on the driver (no Python worker); the
+    # slices follow default parallelism, so coalesce to the one file
+    # the stage checkpoint writes
+    return spark.createDataFrame(
+        out, "entity_id string, canonical_id string"
+    ).coalesce(1)
+
+
+def canonicalize_entities(
+    dictionary: DataFrame,
+    cfg: PipelineConfig = DEFAULT_CONFIG,
+    n_dict: int | None = None,
+) -> DataFrame:
     """Entity merge (north_star stage 6): entities sharing a surface form
     are the same concept; connected components over alias-overlap edges,
-    canonical id = min entity_id of the cluster."""
+    canonical id = min entity_id of the cluster.
+
+    Two regimes, gated like every other dictionary join in ``build_kg``:
+    a dictionary of ``n_dict <= cfg.dict_broadcast_limit`` rows is
+    already broadcast to every executor, so it is collected once and
+    resolved on the driver (``_entity_map_local``: two Spark jobs
+    including the count); a larger one runs the distributed
+    large-star/small-star loop (``connected_components``), the only
+    path that scales to 10^8-alias catalogs. ``n_dict`` is the caller's
+    row count of ``dictionary``; None counts it here."""
+    if n_dict is None:
+        n_dict = dictionary.count()
+    if n_dict <= cfg.dict_broadcast_limit:
+        return _entity_map_local(dictionary)
     a = dictionary.select("alias", F.col("entity_id").alias("e1"))
     b = dictionary.select("alias", F.col("entity_id").alias("e2"))
     edges = (
@@ -847,12 +918,12 @@ def build_kg(
         inputs=["ingest"],
     )
     # one count job over the dictionary (an entity catalog, cheap next to
-    # any corpus pass) gates every broadcast below
+    # any corpus pass) gates every broadcast below and the entity map's
+    # driver pass; a forced broadcast skips it (the entity map then counts)
+    dict_rows = None if use_salting is False else dict_slim.count()
     if use_salting is None:
-        n_dict = dict_slim.count()
-        use_salting = n_dict > cfg.dict_broadcast_limit
-    else:
-        n_dict = dict_slim.count() if use_salting else 0
+        use_salting = dict_rows > cfg.dict_broadcast_limit
+    n_dict = dict_rows or 0
     fuzzy_scores = store.get_or_compute(
         "fuzzy_scores",
         lambda: _fuzzy_scores(
@@ -931,7 +1002,7 @@ def build_kg(
 
     entity_map = store.get_or_compute(
         "entity_map",
-        lambda: canonicalize_entities(dictionary),
+        lambda: canonicalize_entities(dictionary, cfg, n_dict=dict_rows),
         resume=resume,
         inputs=["<dictionary>"],
     )

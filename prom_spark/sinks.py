@@ -112,6 +112,13 @@ class StageStore:
 
         t0 = time.time()
         path = os.path.join(self._dir(stage), "data")
+        # the overwrite below deletes the old data first: drop the
+        # completion marker before it, so a write that dies partway
+        # leaves the stage absent (recomputed on resume), not "done"
+        # over an empty or partial directory
+        marker = os.path.join(self._dir(stage), "metrics.json")
+        if os.path.exists(marker):
+            os.remove(marker)
         out = df
         if sort_within_partitions:
             out = out.sortWithinPartitions(*sort_within_partitions)
@@ -130,8 +137,15 @@ class StageStore:
 
         from pyspark.errors.exceptions.captured import AnalysisException
 
+        reader = self.spark.read
+        if not partition_by:
+            # read back with the schema just written (a file scan makes
+            # it nullable, as inference does): a schema-less read launches
+            # a footer-inference job per stage. Partition column types
+            # stay inferred, as on resume.
+            reader = reader.schema(out.schema)
         try:
-            persisted = self.spark.read.parquet(path)
+            persisted = reader.parquet(path)
         except AnalysisException:
             # empty partitioned write leaves no data files
             persisted = self.spark.createDataFrame([], out.schema)
@@ -159,7 +173,7 @@ class StageStore:
         }
         if iceberg_note:
             metrics["iceberg"] = iceberg_note
-        with open(os.path.join(self._dir(stage), "metrics.json"), "w") as f:
+        with open(marker, "w") as f:
             json.dump(metrics, f, indent=1)
         self.lineage[stage] = inputs or []
         return persisted

@@ -2,6 +2,7 @@
 extraction quality, per-turn text invariant, resume-from-checkpoint,
 determinism, lineage metrics."""
 
+import json
 import os
 
 import pytest
@@ -135,6 +136,10 @@ def test_metrics_lineage(spark, kg):
         m = res.store.metrics(stage)
         assert m["rows"] > 0
         assert sum(p["rows"] for p in m["partitions"]) == m["rows"]
+        if not m.get("alias_of"):
+            # the write's read-back schema is the one a resume infers
+            inferred = spark.read.parquet(os.path.join(base, stage, "data"))
+            assert json.loads(m["schema_json"]) == inferred.schema.jsonValue()
     assert "triples_raw" in res.store.metrics("triples")["inputs"]
 
 
@@ -585,3 +590,96 @@ def test_checkpoint_staleness_invalidation(spark, tmp_path):
         "s", make(), resume=True, inputs=["u1", "gate:x"], require_cols=["kind"]
     )
     assert calls["n"] == 3
+
+
+def _emap_rows(df):
+    return sorted(df.collect(), key=lambda r: (r.entity_id is None, r.entity_id or ""))
+
+
+def _dict_rows(rows):
+    return lambda spark: spark.createDataFrame(rows, "alias string, entity_id string")
+
+
+@pytest.mark.parametrize(
+    "make_dict, merged",
+    [
+        (lambda spark: entity_dictionary(spark, 256), 32),
+        # transitive chain: E3-E1 share "x", E1-E2 share "y"
+        (_dict_rows([("x", "E3"), ("x", "E1"), ("y", "E1"), ("y", "E2"), ("z", "E4")]), 2),
+        # null alias, null entity_id, duplicate rows
+        (_dict_rows([("a", "E2"), ("a", "E2"), ("a", "E1"), (None, "E5"), (None, "E1"),
+                     ("b", None), ("b", "E5"), ("c", "E6")]), 1),
+        (_dict_rows([]), 0),
+    ],
+    ids=["synthetic_256", "chain", "nulls_dups", "empty"],
+)
+def test_entity_map_driver_pass_equals_connected_components(spark, make_dict, merged):
+    """The in-budget driver pass must emit exactly the large-star/
+    small-star path's relation (forced by a zero broadcast budget),
+    schema included, as one partition."""
+    import dataclasses
+
+    from prom_spark.config import DEFAULT_CONFIG
+    from prom_spark.pipeline.kg import canonicalize_entities
+
+    d = make_dict(spark).cache()
+    spark_path = canonicalize_entities(
+        d, dataclasses.replace(DEFAULT_CONFIG, dict_broadcast_limit=0)
+    )
+    local = canonicalize_entities(d)
+    assert local.schema.simpleString() == (
+        "struct<entity_id:string,canonical_id:string>"
+    )
+    assert local.rdd.getNumPartitions() == 1
+    got = _emap_rows(local)
+    assert got == _emap_rows(spark_path)
+    assert sum(r.entity_id != r.canonical_id for r in got) == merged
+
+
+def test_entity_map_driver_pass_job_count(spark):
+    """An in-budget dictionary canonicalizes in at most two Spark jobs
+    (row count + collect) — never the iterative components loop."""
+    from prom_spark.pipeline.kg import canonicalize_entities
+
+    d = entity_dictionary(spark, 256).cache()
+    d.count()
+    sc = spark.sparkContext
+    group = "test_entity_map_driver_pass_job_count"
+    sc.setJobGroup(group, "canonicalize_entities, in budget")
+    try:
+        canonicalize_entities(d)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 2, jobs
+
+
+def test_resume_recomputes_stage_after_failed_rewrite(spark, kg, tmp_path):
+    """A stage rewrite whose job fails partway (the overwrite has already
+    deleted the old data) must not leave the old checkpoint marker
+    behind: resume recomputes the stage and the triples come out
+    unchanged."""
+    import shutil
+
+    from prom_spark.sinks import StageStore
+
+    tr, d, res, base = kg
+    t1 = {tuple(r) for r in res.triples.collect()}
+    base_f = str(tmp_path / "failed_rewrite")
+    shutil.copytree(base, base_f)
+    store = StageStore(spark, base_f)
+    # four write tasks; the last one fails after the others committed
+    broken = spark.range(0, 400, 1, 4).select(
+        F.when(F.col("id") == 399, F.raise_error(F.lit("injected failure")))
+        .otherwise(F.col("id") % 8)
+        .alias("bucket"),
+        F.col("id").cast("string").alias("subj"),
+    )
+    with pytest.raises(Exception, match="injected failure"):
+        store.write("triples_raw", broken, partition_by=["bucket"])
+    assert not store.exists("triples_raw")
+
+    poisoned = tr.withColumn("text", F.lit("POISON"))
+    again = build_kg(spark, poisoned, d, base_f, resume=True)
+    assert again.store.exists("triples_raw")
+    assert {tuple(r) for r in again.triples.collect()} == t1

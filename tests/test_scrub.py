@@ -115,6 +115,24 @@ def test_strip_boilerplate_preserves_order_and_content(spark):
     assert got[2] == "real content C\nmore C"
 
 
+def test_strip_boilerplate_keeps_all_boilerplate_documents(spark):
+    """A document whose every line is boilerplate stays in the output
+    with empty text; no document may vanish."""
+    rows = [
+        ("web", 0, "COOKIE BANNER\nreal content A"),
+        ("web", 1, "COOKIE BANNER\nreal content B"),
+        ("web", 2, "COOKIE BANNER"),
+    ]
+    df = spark.createDataFrame(rows, "source string, doc_id long, text string")
+    got = {
+        r.doc_id: r.clean
+        for r in strip_boilerplate(
+            df, "source", "doc_id", "text", min_doc_frac=0.6, min_docs=2
+        ).collect()
+    }
+    assert got == {0: "real content A", 1: "real content B", 2: ""}
+
+
 def test_strip_boilerplate_broadcasts_detected_set(spark):
     df = spark.createDataFrame(
         [("web", 0, "a\nb"), ("web", 1, "a\nc")],
