@@ -31,6 +31,8 @@ explode, so the exchange is shared.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -67,7 +69,7 @@ _MODEL_CACHE: dict[str, dict[str, str]] = {}
 # Hugging Face MarianMT id (e.g. "Helsinki-NLP/opus-mt-en-de") to load
 # the real model per executor process; unset/"standin" keeps the
 # deterministic lexicon stand-in. The swap touches ONLY _load_model and
-# the per-token map in _mt_translate_token_fn — plan, Arrow batching,
+# the per-token map in _mt_translate_token — plan, Arrow batching,
 # dict-precedence and re-assembly are identical either way.
 MT_MODEL_ENV = "PROM_SPARK_MT_MODEL"
 _STANDIN_MODEL = "standin-en-de"
@@ -97,28 +99,26 @@ def _load_model(name: str):
     return _MODEL_CACHE[name]
 
 
-def _mt_translate_token_fn(tokens: pd.Series) -> pd.Series:
-    """Arrow-batched stage-2 fallback: deterministic stand-in kernel
-    (lexicon hit else pass-through), or the real MarianMT pipeline when
-    ``PROM_SPARK_MT_MODEL`` names one (batched ``model(...)`` call)."""
-    import os
-
-    name = os.environ.get(MT_MODEL_ENV, _STANDIN_MODEL)
-    model = _load_model(name)
-    if isinstance(model, dict):
-        return tokens.map(lambda t: model.get(t, t))
-    out = model(tokens.tolist())  # pragma: no cover - needs MT runtime
-    return pd.Series([o["translation_text"] for o in out], index=tokens.index)
-
-
-def _mt_translate_token():
-    """The pandas UDF is created lazily: the decorator parses its
-    return-type DDL through the active session, so a module-level
+def _mt_translate_token(name: str):
+    """Arrow-batched stage-2 fallback for model ``name``: the
+    deterministic stand-in kernel (lexicon hit else pass-through), or
+    the real MarianMT pipeline (batched ``model(...)`` call). ``name``
+    is resolved on the driver and captured in the UDF closure — an
+    executor never reads ``PROM_SPARK_MT_MODEL`` from its own
+    environment. The pandas UDF is created lazily: the decorator parses
+    its return-type DDL through the active session, so a module-level
     ``@pandas_udf`` would make `import translate` require Spark."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import StringType
 
-    return pandas_udf(_mt_translate_token_fn, StringType())
+    def translate_tokens(tokens: pd.Series) -> pd.Series:
+        model = _load_model(name)
+        if isinstance(model, dict):
+            return tokens.map(lambda t: model.get(t, t))
+        out = model(tokens.tolist())  # pragma: no cover - needs MT runtime
+        return pd.Series([o["translation_text"] for o in out], index=tokens.index)
+
+    return pandas_udf(translate_tokens, StringType())
 
 
 def translate_texts(
@@ -130,7 +130,8 @@ def translate_texts(
     """Translate whitespace-tokenized ``text_col``: domain-dict
     broadcast join first, Arrow-batched model fallback for the misses,
     order-preserving re-assembly per ``key_cols`` row. Returns
-    ``key_cols + [out_col]``."""
+    ``key_cols + [out_col]``. The model switch (``PROM_SPARK_MT_MODEL``)
+    is read here, on the driver, when the plan is built."""
     keys = [F.col(c) for c in key_cols]
     toks = df.select(
         *keys,
@@ -160,8 +161,9 @@ def translate_texts(
     hits = joined.filter(F.col("_dict_tr").isNotNull()).withColumn(
         "_tr", F.col("_dict_tr")
     )
+    model = os.environ.get(MT_MODEL_ENV, _STANDIN_MODEL)
     misses = joined.filter(F.col("_dict_tr").isNull()).withColumn(
-        "_tr", _mt_translate_token()(F.col("_tok"))
+        "_tr", _mt_translate_token(model)(F.col("_tok"))
     )
     staged = hits.unionByName(misses)
     return (

@@ -13,6 +13,7 @@ drops into ``_decode_pixels_stub`` et al. without touching the plan.
 from __future__ import annotations
 
 import hashlib
+import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -68,16 +69,19 @@ def synth_assets(spark, n: int = 64, modality: str = "image") -> DataFrame:
 DECODER_ENV = "PROM_SPARK_IMAGE_DECODER"
 
 
-def _decode_pixels_stub(content: bytes) -> list[float]:
+def _image_decoder() -> str:
+    return os.environ.get(DECODER_ENV, "standin")
+
+
+def _decode_pixels_stub(content: bytes, decoder: str) -> list[float]:
     """STUB decoder: a real implementation would decode the image and
     return pixel statistics. Deterministic fake: 8 floats from the
     payload's sha256 (NOT a real decode — container has no codec libs).
-    With ``PROM_SPARK_IMAGE_DECODER=pillow`` this dispatches to a real
-    Pillow decode (loud failure if the codec lib is absent, never a
-    silent fallback)."""
-    import os
-
-    if os.environ.get(DECODER_ENV, "standin") == "pillow":
+    With ``decoder="pillow"`` this dispatches to a real Pillow decode
+    (loud failure if the codec lib is absent, never a silent fallback).
+    ``decoder`` is the ``PROM_SPARK_IMAGE_DECODER`` value, resolved on
+    the driver (``_image_decoder``) when the plan is built."""
+    if decoder == "pillow":
         try:  # pragma: no cover - no codec libs in this container
             import io
 
@@ -123,6 +127,9 @@ def extract_features(assets: DataFrame, batch_size_hint: int = 1024) -> DataFram
     same pattern as the reference's MT-model preload,
     reference src/translate_onto.py:28-32)."""
 
+    # the switch is resolved here, on the driver, and rides the closure
+    decoder = _image_decoder()
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # per-executor init (codec/model handle) would go here, once
         for pdf in batches:
@@ -131,7 +138,9 @@ def extract_features(assets: DataFrame, batch_size_hint: int = 1024) -> DataFram
                     "asset_id": pdf["asset_id"],
                     "modality": pdf["modality"],
                     "n_bytes": pdf["content"].map(lambda b: len(b or b"")).astype("int32"),
-                    "features": pdf["content"].map(_decode_pixels_stub),
+                    "features": pdf["content"].map(
+                        lambda b: _decode_pixels_stub(b, decoder)
+                    ),
                 }
             )
 

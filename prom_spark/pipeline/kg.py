@@ -3,19 +3,23 @@
 Stages (each a checkpointed table via sinks.StageStore; resumable):
 
   ingest        transcripts, bucketed by hash(conv_id)
-  mentions      candidate grams (Arrow-batched UDF, pipeline.mentions)
-  linked        entity-link scoring: exact + fuzzy candidates against the
-                alias dictionary (broadcast or salted join), ensemble
+  grams         distinct candidate grams (unigrams + first-token-blocked
+                bigrams, pipeline.mentions) — the fuzzy scoring input
+  fuzzy_scores  (gram, entity_id, rating) per distinct non-alias gram:
                 rating = w_s * levenshtein + w_e * embedding-cosine,
-                best-per-mention selection
-  triples_raw   predicate extraction per turn (pattern join over token
-                positions) + cross-turn `follows` via turn-ordered window
+                blocked on (first char, word count)
+  candidates    gram occurrences matching an alias or a fuzzy-scored gram
+                (kind 'm'), plus predicate-token occurrences (kind 'p')
   entity_map    canonicalization: alias-overlap clusters ->
                 entity_id -> canonical_id (one driver pass for a
                 broadcast-sized dictionary, connected components beyond)
-  triples       canonical (subj, pred, obj, conv_id, turn_idx), bucketed
-                by hash(conv_id), sorted within partitions by
+  triples_raw   one exchange: candidates scored against the dictionary and
+                the fuzzy table, best link per span, per-turn predicate
+                patterns + co-occurrence + cross-turn `follows`, written
+                bucketed by hash(conv_id), sorted within partitions by
                 (conv_id, turn_idx)
+  triples       canonical (subj, pred, obj, conv_id, turn_idx): a
+                metadata-only alias of triples_raw
 
 The reference analogue is Prom.run_all (reference src/prom.py:201-213):
 lexical/structural matching -> selection -> link ontology -> merged
@@ -41,11 +45,10 @@ from prom_spark.operators.selection import best_candidate_per_left_agg
 from prom_spark.pipeline.mentions import (
     detect_matching_mentions,
     detect_mentions,
-    detect_predicates,
     distinct_grams,
-    tokens,
+    with_tokens,
 )
-from prom_spark.sinks import StageStore
+from prom_spark.sinks import StageStore, source_fingerprint
 
 # default bucket count for local runs; deployments size it via
 # PipelineConfig.n_output_buckets (see config.py for the sizing rule)
@@ -119,97 +122,49 @@ class KgResult:
     store: StageStore
 
 
-def _link_candidates(
-    mentions: DataFrame,
-    dictionary: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    use_salting: bool | None = None,
+# one scored link candidate (or a selected link) per row
+_LINK_COLS = ("conv_id", "turn_idx", "gram", "start", "end", "entity_id", "rating")
+
+
+def _match_keys(dict_slim: DataFrame, fuzzy_scores: DataFrame) -> DataFrame:
+    """Distinct grams that can link: every alias plus every fuzzy-scored
+    gram — the key set that reduces an occurrence stream to its
+    candidates."""
+    return (
+        dict_slim.select(F.col("alias").alias("gram"))
+        .unionByName(fuzzy_scores.select("gram"))
+        .distinct()
+    )
+
+
+def _semi_reduce(
+    occurrences: DataFrame,
+    keys: DataFrame,
+    n_dict: int,
+    cfg: PipelineConfig,
     hot_keys=None,
 ) -> DataFrame:
-    """Scored link candidates per mention occurrence (pre-selection).
+    """Occurrences whose gram is in ``keys`` (one ``gram`` column).
 
-    Exact path: equi-join gram == alias. When the dictionary fits the
-    broadcast threshold a broadcast hash join is strictly better than
-    any salting scheme (no shuffle at all, skew irrelevant); the salted
-    shuffle join is the path for dictionaries too large to broadcast,
-    where Zipf-hot grams would otherwise pile into single reducers.
-    ``use_salting=None`` picks automatically from the dictionary size.
-
-    Fuzzy path: block on (first char, token count), score ensemble of
-    normalized Levenshtein + embedding cosine — per DISTINCT gram. The
-    bounded score table is then joined back onto occurrences: broadcast
-    when the dictionary regime broadcasts (the occurrence⋈score join on
-    raw `gram` is exactly the Zipf-skewed join salting exists for, and
-    broadcasting removes the shuffle outright), salted otherwise —
-    fuzzy_scores is dictionary-bounded (distinct grams × variants above
-    threshold), so in the beyond-broadcast dictionary regime it must be
-    presumed beyond the broadcast budget too (GBs do not broadcast), and
-    its gram key carries the same Zipf-hot skew as the exact join.
+    The occurrence stream is mostly grams that link to nothing, and
+    shuffling them into a salted join only to drop them wastes the
+    exchange. A broadcast left_semi on the key STRINGS (tiny next to
+    the dictionary rows, whose embedding payloads are what break the
+    broadcast budget) drops them map-side. Above
+    ``alias_broadcast_limit`` dictionary rows even the bare string set
+    exceeds the broadcast budget, and the reduction becomes a salted
+    shuffle semi-join (strings only — no payload rides this exchange).
     """
-    dict_slim = dictionary.select("alias", "entity_id", "embedding")
-    n_dict = None
-    if use_salting is None:
-        # dictionaries are entity catalogs: row count is a fine proxy
-        n_dict = dict_slim.count()
-        use_salting = n_dict > cfg.dict_broadcast_limit
-
-    if use_salting:
-        # semi-join reduction BEFORE the salted shuffle: the mention
-        # stream is mostly non-dictionary grams, and shuffling them to
-        # discover that wastes the exchange. A broadcast left_semi on
-        # just the alias STRINGS (tiny next to the full dictionary rows,
-        # whose embedding payloads are what break the broadcast budget)
-        # drops non-matches map-side, so the salted join only moves rows
-        # that will actually match. Above alias_broadcast_limit even the
-        # bare string set exceeds the broadcast budget, and the
-        # reduction itself becomes a salted shuffle semi-join (strings
-        # only — no payload ever rides this exchange).
-        if n_dict is None:
-            n_dict = dict_slim.count()
-        alias_set = dict_slim.select(F.col("alias").alias("gram")).distinct()
-        if n_dict <= cfg.alias_broadcast_limit:
-            matching = mentions.join(
-                F.broadcast(alias_set), on="gram", how="left_semi"
-            )
-        else:
-            matching = salted_join(
-                mentions, alias_set, key="gram",
-                n_salts=cfg.hot_key_salts,
-                hot_factor=cfg.hot_key_factor,
-                hot_keys=hot_keys,
-                detect_sample_fraction=cfg.hot_key_sample,
-                how="left_semi",
-            )
-        exact_raw = salted_join(
-            matching,
-            dict_slim.withColumnRenamed("alias", "gram"),
-            key="gram",
-            n_salts=cfg.hot_key_salts,
-            hot_factor=cfg.hot_key_factor,
-            hot_keys=hot_keys,
-            detect_sample_fraction=cfg.hot_key_sample,
-        )
-    else:
-        exact_raw = mentions.join(
-            F.broadcast(dict_slim.withColumnRenamed("alias", "gram")), on="gram"
-        )
-    exact = exact_raw.withColumn("rating", F.lit(1.0)).select(
-        "conv_id", "turn_idx", "gram", "start", "end", "entity_id", "rating"
+    if n_dict <= cfg.alias_broadcast_limit:
+        return occurrences.join(F.broadcast(keys), on="gram", how="left_semi")
+    return salted_join(
+        occurrences, keys, key="gram",
+        n_salts=cfg.hot_key_salts,
+        hot_factor=cfg.hot_key_factor,
+        hot_keys=hot_keys,
+        detect_sample_fraction=cfg.hot_key_sample,
+        how="left_semi",
     )
-
-    # fuzzy path: score DISTINCT unmatched grams against the dictionary,
-    # broadcast the bounded score table back onto occurrences. Above the
-    # dictionary broadcast budget the scoring join itself must not
-    # broadcast the embedding payloads either (broadcast_dict=False).
-    fuzzy_scores = _fuzzy_scores(
-        mentions.select("gram").distinct(), dict_slim, cfg,
-        broadcast_dict=not use_salting,
-    )
-    fuzzy = _fuzzy_rejoin(
-        mentions, fuzzy_scores, cfg,
-        broadcast=not use_salting, hot_keys=hot_keys,
-    )
-    return exact.unionByName(fuzzy)
 
 
 def _fuzzy_rejoin(
@@ -242,9 +197,7 @@ def _fuzzy_rejoin(
             hot_keys=hot_keys,
             detect_sample_fraction=cfg.hot_key_sample,
         )
-    return joined.select(
-        "conv_id", "turn_idx", "gram", "start", "end", "entity_id", "rating"
-    )
+    return joined.select(*_LINK_COLS)
 
 
 def _fuzzy_scores(
@@ -318,15 +271,24 @@ def _score_candidates(
     hot_keys=None,
     fuzzy_rows: int | None = None,
 ) -> DataFrame:
-    """Score a PRE-FILTERED occurrence stream (every row's gram is known
-    to match the dictionary exactly or appear in ``fuzzy_scores``).
+    """Scored link candidates (conv_id, turn_idx, gram, start, end,
+    entity_id, rating) for an occurrence stream — the only scorer; flat
+    linking (``link_mentions``) and ``build_kg``'s per-turn linking
+    both run it.
 
-    Same join design as ``_link_candidates`` minus the semi-reduction
-    (already applied upstream) and minus the distinct-gram scoring
-    (supplied precomputed — in ``build_kg`` it is its own checkpoint,
-    so ``fuzzy_rows`` comes free from the stage metrics and refines the
-    fuzzy re-join choice: even in the salted-dictionary regime a score
-    table that MEASURES under the broadcast budget broadcasts).
+    Exact path: equi-join gram == alias, rating 1.0. A dictionary under
+    the broadcast budget (``use_salting=False``) broadcasts — no
+    shuffle at all, skew irrelevant, strictly better than any salting
+    scheme. A larger one takes the salted shuffle join, where Zipf-hot
+    grams would otherwise pile into single reducers; callers reduce the
+    stream first (``_semi_reduce``) so only rows that link ride it.
+
+    Fuzzy path: ``fuzzy_scores`` holds the (gram, entity_id, rating)
+    ensemble scores of the DISTINCT non-alias grams (``_fuzzy_scores``),
+    re-joined onto the occurrences by ``_fuzzy_rejoin``: broadcast in
+    the broadcast regime, or whenever ``fuzzy_rows`` (``build_kg`` reads
+    it free from the checkpoint metrics) measures under the budget;
+    salted otherwise.
     """
     d = dict_slim.withColumnRenamed("alias", "gram")
     if use_salting:
@@ -339,9 +301,7 @@ def _score_candidates(
         )
     else:
         exact_raw = candidates.join(F.broadcast(d), on="gram")
-    exact = exact_raw.withColumn("rating", F.lit(1.0)).select(
-        "conv_id", "turn_idx", "gram", "start", "end", "entity_id", "rating"
-    )
+    exact = exact_raw.withColumn("rating", F.lit(1.0)).select(*_LINK_COLS)
     fuzzy = _fuzzy_rejoin(
         candidates, fuzzy_scores, cfg,
         broadcast=(not use_salting)
@@ -359,69 +319,79 @@ def link_mentions(
     hot_keys=None,
 ) -> DataFrame:
     """Entity-link scoring + per-span selection, flat output
-    (north_star stage 3; see ``_link_candidates`` for the join design).
+    (north_star stage 3) — the stream's micro-batch linker and the q25
+    oracle chain. ``use_salting=None`` picks the join regime from the
+    dictionary size (see ``_score_candidates``).
 
-    Selection: best candidate per mention span via single-shuffle
-    aggregation (map-side combine collapses hot spans pre-exchange).
-    Within a span key the gram is fixed, so selection = max rating,
-    ties to the smallest entity_id.
+    The distinct mention grams are fuzzy-scored first; in the salted
+    regime the stream is then semi-reduced to linkable grams. Selection:
+    best candidate per mention span via single-shuffle aggregation
+    (map-side combine collapses hot spans pre-exchange). Within a span
+    key the gram is fixed, so selection = max rating, ties to the
+    smallest entity_id.
     """
-    candidates = _link_candidates(mentions, dictionary, cfg, use_salting, hot_keys)
+    dict_slim = dictionary.select("alias", "entity_id", "embedding")
+    # dictionaries are entity catalogs: row count is a fine proxy for
+    # the regime; a forced broadcast needs no count
+    n_dict = None if use_salting is False else dict_slim.count()
+    if use_salting is None:
+        use_salting = n_dict > cfg.dict_broadcast_limit
+    # above the dictionary broadcast budget the scoring join must not
+    # broadcast the embedding payloads either
+    fuzzy_scores = _fuzzy_scores(
+        mentions.select("gram").distinct(), dict_slim, cfg,
+        broadcast_dict=not use_salting,
+    )
+    if use_salting:
+        mentions = _semi_reduce(
+            mentions, _match_keys(dict_slim, fuzzy_scores), n_dict, cfg, hot_keys
+        )
+    candidates = _score_candidates(
+        mentions, dict_slim, fuzzy_scores, cfg, use_salting, hot_keys
+    )
     return best_candidate_per_left_agg(
         candidates,
         key_cols=["conv_id", "turn_idx", "start", "end"],
         payload_cols=["entity_id", "gram"],
         threshold=cfg.link_threshold,
-    ).select("conv_id", "turn_idx", "gram", "start", "end", "entity_id", "rating")
+    ).select(*_LINK_COLS)
 
 
 # per-turn entity struct carried into predicate extraction; field names
 # (ts, te) avoid the ANSI-reserved `end`
 _ENT_STRUCT = "struct<ts:int,te:int,entity_id:string>"
-
-
-def link_mentions_per_turn(
-    mentions: DataFrame,
-    dictionary: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    use_salting: bool | None = None,
-    entity_map: DataFrame | None = None,
-    hot_keys=None,
-) -> DataFrame:
-    """Entity linking straight to per-turn entity arrays — the fused
-    form ``build_kg`` uses.
-
-    One shuffle takes the scored candidate stream directly to
-    ``(conv_id, turn_idx, ents)``; per-span selection happens INSIDE the
-    per-turn array (keep-first over the span-sorted candidates, which
-    under the sort key (ts, te, -rating, entity_id) is exactly the flat
-    path's max-rating / min-entity choice — equivalence is tested).
-    Canonical ids are applied on the candidate stream (broadcast join),
-    so downstream needs no further mapping and no global dedup.
-
-    Versus the flat formulation this removes an entire checkpoint
-    round-trip and re-shuffle of the per-mention link table — on a
-    single box that table's movement is pure memory-bandwidth cost, and
-    on a cluster it is a full extra exchange of the largest intermediate.
-    """
-    cand = _link_candidates(mentions, dictionary, cfg, use_salting, hot_keys)
-    return _per_turn_select(cand, cfg, entity_map)
-
-
 _CAND_STRUCT = "struct<ts:int,te:int,nr:double,entity_id:string>"
 _PRED_STRUCT = "struct<p:int,tok:string>"
+
+
+def _canonical_ids(links: DataFrame, entity_map: DataFrame) -> DataFrame:
+    """``links`` with each entity_id replaced by its canonical id
+    (broadcast map; ids the map lacks keep their own)."""
+    return (
+        links.join(F.broadcast(entity_map), on="entity_id", how="left")
+        .withColumn("entity_id", F.coalesce("canonical_id", "entity_id"))
+        .drop("canonical_id")
+    )
 
 
 def _per_turn_select(
     cand: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
     entity_map: DataFrame | None = None,
-    preds: DataFrame | None = None,
+    *,
+    preds: DataFrame,
     layout: dict | None = None,
 ) -> DataFrame:
-    """Scored candidate stream -> (conv_id, turn_idx, ents) in one
-    shuffle, canonical ids applied pre-grouping, per-span selection
-    inside the sorted array (see ``link_mentions_per_turn``).
+    """Scored candidate stream (``_score_candidates``) -> (conv_id,
+    turn_idx, ents) in one shuffle — ``build_kg``'s per-turn linking.
+
+    Canonical ids are applied on the candidate stream (broadcast join)
+    before grouping; per-span selection happens INSIDE the per-turn
+    array: keep-first over the span-sorted candidates, which under the
+    sort key (ts, te, -rating, entity_id) is the flat path's
+    max-rating / min-entity choice (``link_mentions``; equivalence is
+    tested). No per-mention link table is ever materialized or
+    re-shuffled.
 
     ``layout``: optional ``_bucket_layout`` kwargs
     (``n_buckets``/``n_rows``/``min_bucket_rows``). When given, the
@@ -435,22 +405,17 @@ def _per_turn_select(
     keys the same way — one exchange serves the grouping, the window,
     and the final bucketed write.
 
-    ``preds``: optional predicate-occurrence stream (conv_id, turn_idx,
-    gram, start — from ``detect_predicates`` / the fused candidate
-    scan). When given, predicate positions ride the SAME grouping
-    shuffle as extra null-padded rows and the output gains a ``preds``
-    array column — so triple extraction downstream needs no join back to
-    the transcript text at all. Turns whose candidates all fall below
-    the rating threshold are dropped even when they carry predicates
-    (identical row set to the preds-less form — nothing to extract from
-    a turn with no linked entities)."""
+    ``preds``: the predicate-occurrence stream (conv_id, turn_idx, gram,
+    start — the candidate scan's kind='p' rows). Predicate positions
+    ride the SAME grouping shuffle as extra null-padded rows and the
+    output gains a ``preds`` array column — so triple extraction
+    downstream needs no join back to the transcript text at all. Turns
+    whose candidates all fall below the rating threshold are dropped
+    even when they carry predicates (nothing to extract from a turn with
+    no linked entities)."""
     cand = cand.filter(F.col("rating") > cfg.link_threshold)
     if entity_map is not None:
-        cand = (
-            cand.join(F.broadcast(entity_map), on="entity_id", how="left")
-            .withColumn("entity_id", F.coalesce("canonical_id", "entity_id"))
-            .drop("canonical_id")
-        )
+        cand = _canonical_ids(cand, entity_map)
     cand_struct = F.struct(
         F.col("start").alias("ts"),
         F.col("end").alias("te"),
@@ -469,14 +434,6 @@ def _per_turn_select(
                     AS {_ENT_STRUCT}))
         """
     ).alias("ents")
-    if preds is None:
-        if layout is not None:
-            cand = _bucket_layout(cand, keep_sub=True, **layout)
-        keys = [c for c in ("bucket", "_sub") if c in cand.columns]
-        per_turn = cand.groupBy(*keys, "conv_id", "turn_idx").agg(
-            F.array_sort(F.collect_list(cand_struct)).alias("_cands")
-        )
-        return per_turn.select(*keys, "conv_id", "turn_idx", ents_expr)
     rows = cand.select(
         "conv_id",
         "turn_idx",
@@ -555,9 +512,9 @@ def extract_triples(
         raise ValueError(
             "extract_triples: `linked` carries no per-turn `preds` column "
             "and no transcripts frame was given — predicate positions "
-            "must come from one of them. A `linked` frame from before the "
-            "fused-preds format (e.g. an old checkpoint) needs "
-            "transcripts=..., or recompute the stage with resume=False."
+            "must come from one of them: pass per-turn ents + preds "
+            "arrays (_per_turn_select(preds=...)), or flat link_mentions "
+            "output with transcripts=..."
         )
     carry = []
     if "ents" in linked.columns and "preds" in linked.columns:
@@ -566,22 +523,9 @@ def extract_triples(
         # transcript scan, no join
         carry = [c for c in ("bucket", "_sub") if c in linked.columns]
         per_turn = linked.select("conv_id", "turn_idx", *carry, "ents", "preds")
-    elif "ents" in linked.columns:
-        # per-turn input from link_mentions_per_turn: already canonical,
-        # already span-selected — no grouping shuffle needed here
-        ents = linked.select("conv_id", "turn_idx", "ents")
-        per_turn = None
     else:
         if entity_map is not None:
-            linked = (
-                linked.join(
-                    F.broadcast(entity_map), on="entity_id", how="left"
-                )
-                .withColumn(
-                    "entity_id", F.coalesce("canonical_id", "entity_id")
-                )
-                .drop("canonical_id")
-            )
+            linked = _canonical_ids(linked, entity_map)
         # struct fields renamed (ts, te): `end` is reserved under the ANSI
         # parser and would break the lambda field accesses below
         ents = linked.groupBy("conv_id", "turn_idx").agg(
@@ -595,12 +539,8 @@ def extract_triples(
                 )
             ).alias("ents")
         )
-        per_turn = None
-    if per_turn is None:
-        if "_toks" not in transcripts.columns:
-            transcripts = transcripts.withColumn("_toks", tokens(F.col("text")))
         preds = (
-            transcripts
+            with_tokens(transcripts)
             .select(
                 "conv_id",
                 "turn_idx",
@@ -830,7 +770,7 @@ def build_kg(
     """Run (or resume) the full pipeline, checkpointing every stage.
 
     ``use_salting=None`` (the default) picks the join strategy from the
-    dictionary size, exactly like ``_link_candidates``: a dictionary
+    dictionary size, exactly like ``link_mentions``: a dictionary
     under ``cfg.dict_broadcast_limit`` broadcasts (no shuffle, skew
     irrelevant — strictly better than any salting scheme), a larger one
     takes the salted shuffle path. Pass True/False to force a path
@@ -848,12 +788,17 @@ def build_kg(
     resume).
 
     Checkpoint validity: every stage's recorded ``inputs`` list (which
-    includes a config-derived plan-gate tag for the candidate stage) and
-    required output columns are checked against the checkpoint's stored
-    metrics on resume; a stage whose inputs or schema no longer match is
-    recomputed rather than silently reused or crashed into mid-plan.
+    includes a config-derived plan-gate tag for the candidate stage and
+    a metadata-only ``source_fingerprint`` of the transcripts and the
+    dictionary) and required output columns are checked against the
+    checkpoint's stored metrics on resume; a stage whose inputs or
+    schema no longer match, or one of whose input stages was rewritten
+    in this run, is recomputed rather than silently reused or crashed
+    into mid-plan.
     """
     store = StageStore(spark, base_dir)
+    source = source_fingerprint(transcripts)
+    dict_source = source_fingerprint(dictionary)
     n_buckets = getattr(cfg, "n_output_buckets", N_BUCKETS)
 
     # NOT pre-tokenized: storing a `_toks` array column at ingest was
@@ -879,7 +824,7 @@ def build_kg(
             min_bucket_rows=cfg.sub_split_min_bucket_rows,
         ),
         resume=resume,
-        inputs=["<source transcripts>"],
+        inputs=[source],
         partition_by=["bucket"],
         sort_within_partitions=["conv_id", "turn_idx"],
     )
@@ -931,13 +876,9 @@ def build_kg(
             broadcast_dict=not (use_salting and n_dict > cfg.dict_broadcast_limit),
         ),
         resume=resume,
-        inputs=["grams", "<dictionary>"],
+        inputs=["grams", dict_source],
     )
-    match_keys = (
-        dict_slim.select(F.col("alias").alias("gram"))
-        .unionByName(fuzzy_scores.select("gram"))
-        .distinct()
-    )
+    match_keys = _match_keys(dict_slim, fuzzy_scores)
     # predicate occurrences ride the candidate stage (kind='p') so the
     # triple-extraction stage needs no second pass over the corpus text;
     # the inline plan detects them in the SAME scan, the explode plans
@@ -957,46 +898,33 @@ def build_kg(
     )
 
     def _candidates():
-        if n_dict > cfg.alias_broadcast_limit:
-            # the alias string set itself exceeds the broadcast budget:
-            # the semi-reduction becomes a salted shuffle semi-join
-            # (strings only)
-            return salted_join(
-                mentions_full, match_keys, key="gram",
-                n_salts=cfg.hot_key_salts,
-                hot_factor=cfg.hot_key_factor,
-                hot_keys=hot_keys,
-                detect_sample_fraction=cfg.hot_key_sample,
-                how="left_semi",
-            ).withColumn("kind", F.lit("m")).unionByName(
-                detect_predicates(ingest, PREDICATES)
-            )
         # three escalating plans, all emitting the identical relation:
         #   keyset <= inline_keyset_limit   membership probed INSIDE the
         #       token arrays before any explode (detect_matching_mentions
         #       — only true mentions ever become rows; measured 2.5x
         #       faster than exploding the full stream into a semi-join)
-        #   <= alias_broadcast_limit        explode + broadcast semi-join
-        #   above                           (handled above)
-        inline_keys = [
-            r.gram
-            for r in match_keys.limit(cfg.inline_keyset_limit + 1).collect()
-        ]
-        if len(inline_keys) <= cfg.inline_keyset_limit:
-            return detect_matching_mentions(
-                ingest, inline_keys, predicates=PREDICATES
-            )
-        return mentions_full.join(
-            F.broadcast(match_keys), on="gram", how="left_semi"
+        #   otherwise                       explode + _semi_reduce
+        #       (broadcast semi-join, salted above alias_broadcast_limit)
+        if n_dict <= cfg.alias_broadcast_limit:
+            inline_keys = [
+                r.gram
+                for r in match_keys.limit(cfg.inline_keyset_limit + 1).collect()
+            ]
+            if len(inline_keys) <= cfg.inline_keyset_limit:
+                return detect_matching_mentions(
+                    ingest, inline_keys, predicates=PREDICATES
+                )
+        return _semi_reduce(
+            mentions_full, match_keys, n_dict, cfg, hot_keys
         ).withColumn("kind", F.lit("m")).unionByName(
-            detect_predicates(ingest, PREDICATES)
+            detect_matching_mentions(ingest, [], predicates=PREDICATES)
         )
 
     candidates = store.get_or_compute(
         "candidates",
         _candidates,
         resume=resume,
-        inputs=["ingest", "fuzzy_scores", "<dictionary>", gate_tag],
+        inputs=["ingest", "fuzzy_scores", dict_source, gate_tag],
         require_cols=["kind"],
     )
 
@@ -1004,7 +932,7 @@ def build_kg(
         "entity_map",
         lambda: canonicalize_entities(dictionary, cfg, n_dict=dict_rows),
         resume=resume,
-        inputs=["<dictionary>"],
+        inputs=[dict_source],
     )
 
     # per-turn linking and triple extraction share ONE plan and ONE
@@ -1052,7 +980,7 @@ def build_kg(
             )),
         ).drop("_sub"),
         resume=resume,
-        inputs=["candidates", "fuzzy_scores", "<dictionary>", "entity_map"],
+        inputs=["candidates", "fuzzy_scores", dict_source, "entity_map"],
         partition_by=["bucket"],
         sort_within_partitions=["conv_id", "turn_idx"],
     )

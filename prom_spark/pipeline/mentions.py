@@ -68,8 +68,25 @@ def _candidate_grams(texts: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def _bigrams_native(bigram_first_tokens: list[str] | None = None) -> Column:
-    """Bigram struct array from a ``_toks`` column, JVM-only.
+def with_tokens(transcripts: DataFrame) -> DataFrame:
+    """``transcripts`` with its ``_toks`` token-array column — reused
+    when the caller already threads one through, derived otherwise."""
+    if "_toks" in transcripts.columns:
+        return transcripts
+    return transcripts.withColumn("_toks", tokens(F.col("text")))
+
+
+def _bigram_array(
+    make,
+    empty_type: str,
+    bigram_first_tokens: list[str] | None = None,
+    keep=None,
+) -> Column:
+    """Per-turn bigram array over a ``_toks`` column, JVM-only: the one
+    expression every gram scanner shares. ``make(gram, i)`` builds the
+    element for the bigram starting at token ``i``; ``keep`` optionally
+    filters the elements; turns under two tokens give an empty
+    ``empty_type`` array.
 
     ``bigram_first_tokens`` prunes candidate bigrams at the source: a
     bigram is emitted only when its first token can start a multiword
@@ -89,21 +106,30 @@ def _bigrams_native(bigram_first_tokens: list[str] | None = None) -> Column:
                 first_set, F.element_at(F.col("_toks"), i + 1)
             ),
         )
-    return F.when(
-        F.size("_toks") >= 2,
-        F.transform(
-            positions,
-            lambda i: F.struct(
-                F.concat_ws(
-                    " ",
-                    F.element_at(F.col("_toks"), i + 1),
-                    F.element_at(F.col("_toks"), i + 2),
-                ).alias("gram"),
-                i.cast("int").alias("start"),
-                (i + 1).cast("int").alias("end"),
+    arr = F.transform(
+        positions,
+        lambda i: make(
+            F.concat_ws(
+                " ",
+                F.element_at(F.col("_toks"), i + 1),
+                F.element_at(F.col("_toks"), i + 2),
             ),
+            i,
         ),
-    ).otherwise(F.array().cast(f"array<{_GRAM_STRUCT}>"))
+    )
+    if keep is not None:
+        arr = F.filter(arr, keep)
+    return F.when(F.size("_toks") >= 2, arr).otherwise(
+        F.array().cast(empty_type)
+    )
+
+
+def _gram_struct(gram, start, end) -> Column:
+    return F.struct(
+        gram.alias("gram"),
+        start.cast("int").alias("start"),
+        end.cast("int").alias("end"),
+    )
 
 
 def detect_mentions(
@@ -123,48 +149,33 @@ def detect_mentions(
     that would be a stateful stream-stream join).
     """
     if impl == "arrow":
-        g = transcripts.select(
-            "conv_id",
-            "turn_idx",
-            *keep_cols,
-            F.explode(_candidate_grams(F.col("text"))).alias("m"),
-        ).select(
-            "conv_id",
-            "turn_idx",
-            *keep_cols,
-            F.col("m.gram").alias("gram"),
-            F.col("m.start").alias("start"),
-            F.col("m.end").alias("end"),
+        grams = _candidate_grams(F.col("text"))
+    else:
+        # native: ONE pass over the token array — tokenization (the regex
+        # split) is the dominant per-turn cost, so a two-branch
+        # unigram/bigram union that re-tokenizes the text measures ~3x
+        # slower end-to-end despite its prettier unigram plan. A
+        # transcript frame that already carries a ``_toks`` column skips
+        # the regex entirely — callers that tokenize once and fan out
+        # several scans can thread the array through. (kg.build_kg
+        # deliberately does NOT store ``_toks`` at ingest: the +50%
+        # stage-table write cost exceeded what the downstream scans save
+        # — see the measured trade documented at the ingest stage in
+        # kg.build_kg.)
+        transcripts = with_tokens(transcripts)
+        grams = F.concat(
+            F.transform("_toks", lambda x, i: _gram_struct(x, i, i)),
+            _bigram_array(
+                lambda gram, i: _gram_struct(gram, i, i + 1),
+                f"array<{_GRAM_STRUCT}>",
+                bigram_first_tokens,
+            ),
         )
-        return g.filter(~F.col("gram").isin(*STOP_GRAMS))
-
-    # native: ONE pass over the token array — tokenization (the regex
-    # split) is the dominant per-turn cost, so a two-branch
-    # unigram/bigram union that re-tokenizes the text measures ~3x
-    # slower end-to-end despite its prettier unigram plan. A transcript
-    # frame that already carries a ``_toks`` column skips the regex
-    # entirely — callers that tokenize once and fan out several scans
-    # can thread the array through. (kg.build_kg deliberately does NOT
-    # store ``_toks`` at ingest: the +50% stage-table write cost
-    # exceeded what the downstream scans save — see the measured trade
-    # documented at the ingest stage in kg.build_kg.)
-    uni = F.transform(
-        "_toks",
-        lambda x, i: F.struct(
-            x.alias("gram"),
-            i.cast("int").alias("start"),
-            i.cast("int").alias("end"),
-        ),
-    )
-    if "_toks" not in transcripts.columns:
-        transcripts = transcripts.withColumn("_toks", tokens(F.col("text")))
     g = transcripts.select(
         "conv_id",
         "turn_idx",
         *keep_cols,
-        F.explode(
-            F.concat(uni, _bigrams_native(bigram_first_tokens))
-        ).alias("m"),
+        F.explode(grams).alias("m"),
     ).select(
         "conv_id",
         "turn_idx",
@@ -227,8 +238,6 @@ def detect_matching_mentions(
             fields.append(F.lit(kind).alias("kind"))
         return F.struct(*fields)
 
-    if "_toks" not in transcripts.columns:
-        transcripts = transcripts.withColumn("_toks", tokens(F.col("text")))
     parts = []
     if uni_keys:
         parts.append(
@@ -241,27 +250,14 @@ def detect_matching_mentions(
             )
         )
     if bi_keys:
-        positions = F.sequence(F.lit(0), F.size("_toks") - 2)
         parts.append(
-            F.when(
-                F.size("_toks") >= 2,
-                F.filter(
-                    F.transform(
-                        positions,
-                        lambda i: _struct(
-                            F.concat_ws(
-                                " ",
-                                F.element_at(F.col("_toks"), i + 1),
-                                F.element_at(F.col("_toks"), i + 2),
-                            ),
-                            i.cast("int"),
-                            (i + 1).cast("int"),
-                            "m",
-                        ),
-                    ),
-                    lambda s: s["gram"].isin(*bi_keys),
+            _bigram_array(
+                lambda gram, i: _struct(
+                    gram, i.cast("int"), (i + 1).cast("int"), "m"
                 ),
-            ).otherwise(F.array().cast(_EMPTY))
+                _EMPTY,
+                keep=lambda s: s["gram"].isin(*bi_keys),
+            )
         )
     if predicates:
         parts.append(
@@ -276,7 +272,7 @@ def detect_matching_mentions(
     if not parts:
         parts = [F.array().cast(_EMPTY)]
     out_cols = ["gram", "start", "end"] + (["kind"] if kinds else [])
-    return transcripts.select(
+    return with_tokens(transcripts).select(
         "conv_id",
         "turn_idx",
         F.explode(F.concat(*parts) if len(parts) > 1 else parts[0]).alias("m"),
@@ -284,40 +280,6 @@ def detect_matching_mentions(
         "conv_id",
         "turn_idx",
         *[F.col(f"m.{c}").alias(c) for c in out_cols],
-    )
-
-
-def detect_predicates(transcripts: DataFrame, predicates: list[str]) -> DataFrame:
-    """Predicate-token occurrences (conv_id, turn_idx, gram, start, end,
-    kind='p') — the standalone scan the explode+semi-join candidate plans
-    union in (the inline plan gets predicates fused into its one scan via
-    ``detect_matching_mentions(predicates=...)``). No stop-gram filter:
-    semantics match ``isin(*PREDICATES)`` over the raw token array."""
-    if "_toks" not in transcripts.columns:
-        transcripts = transcripts.withColumn("_toks", tokens(F.col("text")))
-    return transcripts.select(
-        "conv_id",
-        "turn_idx",
-        F.explode(
-            F.filter(
-                F.transform(
-                    "_toks",
-                    lambda x, i: F.struct(
-                        x.alias("gram"),
-                        i.cast("int").alias("start"),
-                        i.cast("int").alias("end"),
-                    ),
-                ),
-                lambda s: s["gram"].isin(*sorted(set(predicates))),
-            )
-        ).alias("m"),
-    ).select(
-        "conv_id",
-        "turn_idx",
-        F.col("m.gram").alias("gram"),
-        F.col("m.start").alias("start"),
-        F.col("m.end").alias("end"),
-        F.lit("p").alias("kind"),
     )
 
 
@@ -331,29 +293,10 @@ def distinct_grams(
     repeats tokens within a turn), so the partial-aggregate hash table
     sees materially fewer rows. This is the fuzzy-scoring input
     (vocabulary-bounded, corpus-independent output)."""
-    if "_toks" not in transcripts.columns:
-        transcripts = transcripts.withColumn("_toks", tokens(F.col("text")))
-    uni = F.col("_toks")
-    if bigram_first_tokens is not None:
-        first_set = F.array(*[F.lit(t) for t in sorted(set(bigram_first_tokens))])
-        positions = F.filter(
-            F.sequence(F.lit(0), F.size("_toks") - 2),
-            lambda i: F.array_contains(first_set, F.element_at(F.col("_toks"), i + 1)),
-        )
-    else:
-        positions = F.sequence(F.lit(0), F.size("_toks") - 2)
-    big = F.when(
-        F.size("_toks") >= 2,
-        F.transform(
-            positions,
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(F.col("_toks"), i + 1),
-                F.element_at(F.col("_toks"), i + 2),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    g = transcripts.select(
-        F.explode(F.array_distinct(F.concat(uni, big))).alias("gram")
+    big = _bigram_array(
+        lambda gram, i: gram, "array<string>", bigram_first_tokens
+    )
+    g = with_tokens(transcripts).select(
+        F.explode(F.array_distinct(F.concat(F.col("_toks"), big))).alias("gram")
     )
     return g.filter(~F.col("gram").isin(*STOP_GRAMS)).distinct()

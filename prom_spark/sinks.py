@@ -16,6 +16,7 @@ logic is identical either way.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 from dataclasses import dataclass, field
@@ -63,12 +64,42 @@ def write_iceberg(
     writer.createOrReplace()
 
 
+def source_fingerprint(df: DataFrame) -> str:
+    """Metadata-only identity of a pipeline's external input, recorded
+    in the checkpoint ``inputs`` of the stages that read it, so a resume
+    over different source data recomputes instead of reusing.
+
+    A file-backed frame is named by its schema, its canonicalized plan
+    (the filters/projections over the files, expression ids normalized)
+    and every input file's path, size and modification time — stable
+    across processes, so a restarted run still resumes. Any other frame
+    (in-memory rows, generated data) is named by its schema and its
+    analyzed plan's ``semanticHash()``. Neither form starts a Spark
+    job: file sizes come from the file system, not from the data."""
+    h = hashlib.sha256(df.schema.json().encode())
+    files = sorted(df.inputFiles())
+    if files:
+        jvm = df.sparkSession._jvm
+        conf = df.sparkSession._jsc.hadoopConfiguration()
+        h.update(
+            df._jdf.queryExecution().analyzed().canonicalized().toString().encode()
+        )
+        for f in files:
+            path = jvm.org.apache.hadoop.fs.Path(f)
+            st = path.getFileSystem(conf).getFileStatus(path)
+            h.update(f"\n{f}\t{st.getLen()}\t{st.getModificationTime()}".encode())
+    else:
+        h.update(f"\nsemantic:{df.semanticHash()}".encode())
+    return f"source:{h.hexdigest()[:32]}"
+
+
 @dataclass
 class StageStore:
     """Parquet-backed stage checkpoint store."""
 
     spark: SparkSession
     base_dir: str
+    # stage -> inputs, for every stage this store wrote in this run
     lineage: dict[str, list[str]] = field(default_factory=dict)
 
     def _dir(self, stage: str) -> str:
@@ -186,15 +217,20 @@ class StageStore:
     ) -> str | None:
         """Why an existing checkpoint may NOT be resumed (None = valid).
 
-        Two invalidation rules, both against stored metrics only (no data
-        read): the recorded ``inputs`` lineage must equal what the caller
-        would record today (upstream stage set, plan-gate tags), and the
-        stored schema must carry every ``require_cols`` column (a format
-        from before a pipeline change must recompute, not crash mid-plan
-        on a missing column)."""
+        Three invalidation rules, all against stored metrics only (no
+        data read): the recorded ``inputs`` lineage must equal what the
+        caller would record today (upstream stage set, source
+        fingerprints, plan-gate tags); no input stage may have been
+        rewritten by this store in this run (its data is newer than the
+        checkpoint built from it); and the stored schema must carry every
+        ``require_cols`` column (a format from before a pipeline change
+        must recompute, not crash mid-plan on a missing column)."""
         m = self.metrics(stage)
         if inputs is not None and m.get("inputs") != inputs:
             return f"inputs changed: {m.get('inputs')} -> {inputs}"
+        rewritten = [s for s in inputs or [] if s in self.lineage]
+        if rewritten:
+            return f"input stages rewritten in this run: {rewritten}"
         if require_cols:
             if m.get("schema_json"):
                 have = {

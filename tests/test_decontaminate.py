@@ -147,3 +147,28 @@ def test_dedup_representatives_on_simhash_pairs(spark):
     for i in (100 + j for j in range(10)):
         if i in paired:
             assert i not in kept
+
+
+def test_dedup_representatives_ids_beyond_2_pow_53(spark):
+    """bigint ids past double precision (2^53 + 1 rounds to 2^53 as a
+    double) must keep their own clusters: the component join may not
+    compare ids through a lossy coercion."""
+    from prom_spark.operators.dedup import dedup_representatives
+
+    base = 2**53
+    ids = [base + k for k in range(4)]
+    docs = spark.createDataFrame(
+        [(i, f"doc {i}") for i in ids], "doc_id long, text string"
+    )
+    # chain base ~ base+1 ~ base+2; base+3 is a singleton
+    pairs = spark.createDataFrame(
+        [(ids[0], ids[1]), (ids[1], ids[2])], "id1 long, id2 long"
+    )
+    rows = {
+        r.doc_id: (r.cluster, r.keep)
+        for r in dedup_representatives(docs, pairs, "doc_id").collect()
+    }
+    assert set(rows) == set(ids)
+    assert {rows[i][0] for i in ids[:3]} == {ids[0]}
+    assert rows[ids[3]][0] == ids[3]
+    assert [i for i in ids if rows[i][1]] == [ids[0], ids[3]]

@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from prom_spark.datagen import entity_dictionary, synth_transcripts
+from prom_spark.datagen import PREDICATES, entity_dictionary, synth_transcripts
 from prom_spark.pipeline.kg import build_kg
 
 
@@ -73,30 +73,45 @@ def test_per_turn_text_invariant(spark, kg):
     assert agg.filter((F.col("mx") != F.col("n") - 1) | (F.col("d") != F.col("n"))).count() == 0
 
 
-def test_resume_reuses_checkpoints_and_is_identical(spark, kg):
+@pytest.fixture()
+def stage_writes(monkeypatch):
+    """Names of the stages StageStore.write materializes while the test
+    runs — a resume proves it loaded a checkpoint by NOT writing it."""
+    from prom_spark.sinks import StageStore
+
+    written = []
+    write = StageStore.write
+
+    def spy(self, stage, *args, **kwargs):
+        written.append(stage)
+        return write(self, stage, *args, **kwargs)
+
+    monkeypatch.setattr(StageStore, "write", spy)
+    return written
+
+
+def test_resume_reuses_checkpoints_and_is_identical(spark, kg, stage_writes):
     tr, d, res, base = kg
-    # resume run must not recompute: poison the input to prove stages load
-    # from checkpoints
-    poisoned = tr.withColumn("text", F.lit("POISON"))
-    res2 = build_kg(spark, poisoned, d, base, resume=True)
+    # resume run on the same inputs must not recompute any stage
+    res2 = build_kg(spark, tr, d, base, resume=True)
+    assert stage_writes == []
     t1 = {tuple(r) for r in res.triples.collect()}
     t2 = {tuple(r) for r in res2.triples.collect()}
     assert t1 == t2 and len(t1) > 0
 
 
-def test_resume_after_midrun_kill(spark, kg, tmp_path):
+def test_resume_after_midrun_kill(spark, kg, tmp_path, stage_writes):
     """SURVEY §5 resumability: kill after stage k, resume, identical
     output. Simulates two kill points against a COPY of the checkpoint
     store: (a) killed between stages — the downstream stage dirs are
     gone entirely; (b) killed mid-write — a stage left partial data but
     no metrics.json (written only after the data write completes, so
-    its absence marks the stage incomplete). Both resumes run with
-    POISONED transcripts, proving recovery reads only the surviving
+    its absence marks the stage incomplete). Both resumes rewrite only
+    the lost stage, proving recovery starts from the surviving
     checkpoints, never the raw input."""
     import shutil
 
     tr, d, res, base = kg
-    poisoned = tr.withColumn("text", F.lit("POISON"))
     t1 = {tuple(r) for r in res.triples.collect()}
 
     # (a) killed between candidates and triple extraction
@@ -104,7 +119,8 @@ def test_resume_after_midrun_kill(spark, kg, tmp_path):
     shutil.copytree(base, base_a)
     for stage in ("triples_raw", "triples"):
         shutil.rmtree(os.path.join(base_a, stage))
-    res_a = build_kg(spark, poisoned, d, base_a, resume=True)
+    res_a = build_kg(spark, tr, d, base_a, resume=True)
+    assert stage_writes == ["triples_raw"]
     assert {tuple(r) for r in res_a.triples.collect()} == t1
 
     # (b) killed mid-write: partial data present, metrics.json missing
@@ -117,7 +133,9 @@ def test_resume_after_midrun_kill(spark, kg, tmp_path):
     )[0]
     victim_path = os.path.join(data_dir, victim)
     (shutil.rmtree if os.path.isdir(victim_path) else os.remove)(victim_path)
-    res_b = build_kg(spark, poisoned, d, base_b, resume=True)
+    stage_writes.clear()
+    res_b = build_kg(spark, tr, d, base_b, resume=True)
+    assert stage_writes == ["triples_raw"]
     assert {tuple(r) for r in res_b.triples.collect()} == t1
 
 
@@ -265,7 +283,6 @@ def test_detect_matching_mentions_predicates(spark):
     from prom_spark.pipeline.mentions import (
         STOP_GRAMS,
         detect_matching_mentions,
-        detect_predicates,
         tokens,
     )
 
@@ -305,23 +322,22 @@ def test_detect_matching_mentions_predicates(spark):
     both = out.filter(F.col("gram") == keys[0])
     kinds = {r.kind for r in both.select("kind").distinct().collect()}
     assert kinds == {"m", "p"}
-    # standalone scan (explode-plan union input) emits the same 'p' rows
-    alt = {
-        tuple(r)
-        for r in detect_predicates(tr, preds).select(*cols).collect()
-    }
-    assert alt == p
+    # predicate-only scan (the explode plans' union input): same 'p' rows
+    alt = detect_matching_mentions(tr, [], predicates=preds)
+    assert {r.kind for r in alt.select("kind").distinct().collect()} == {"p"}
+    assert {tuple(r) for r in alt.select(*cols).collect()} == p
 
 
 def test_fused_triples_equal_unfused_extraction(spark, kg):
     """build_kg's single-exchange triples stage (preds carried through
     the candidate stream, window keyed on the layout columns) must emit
-    exactly the triples of the unfused formulation: per-turn linking
-    without preds + transcript re-scan + (conv_id, turn_idx) join."""
+    exactly the triples of the flat path the stream runs: flat linking
+    + canonical mapping + transcript re-scan + (conv_id, turn_idx)
+    join, over the same first-token-blocked mentions."""
     from prom_spark.pipeline.kg import (
         canonicalize_entities,
         extract_triples,
-        link_mentions_per_turn,
+        link_mentions,
     )
     from prom_spark.pipeline.mentions import detect_mentions
 
@@ -335,10 +351,9 @@ def test_fused_triples_equal_unfused_extraction(spark, kg):
     ]
     m = detect_mentions(tr, bigram_first_tokens=first_tokens)
     emap = canonicalize_entities(d)
-    linked_old = link_mentions_per_turn(m, d, entity_map=emap)
     want = {
         tuple(r)
-        for r in extract_triples(tr, linked_old)
+        for r in extract_triples(tr, link_mentions(m, d), entity_map=emap)
         .select("conv_id", "turn_idx", "subj", "pred", "obj")
         .collect()
     }
@@ -352,15 +367,18 @@ def test_fused_triples_equal_unfused_extraction(spark, kg):
 
 
 def test_per_turn_linking_equals_flat_linking(spark):
-    """link_mentions_per_turn (fused, in-array span selection) must make
-    exactly the flat path's choices after canonical mapping."""
+    """build_kg's per-turn linking (_per_turn_select over
+    _score_candidates: in-array span selection) must make exactly the
+    flat path's (link_mentions) choices after canonical mapping."""
     from prom_spark.datagen import entity_dictionary, synth_transcripts
     from prom_spark.pipeline.kg import (
+        _fuzzy_scores,
+        _per_turn_select,
+        _score_candidates,
         canonicalize_entities,
         link_mentions,
-        link_mentions_per_turn,
     )
-    from prom_spark.pipeline.mentions import detect_mentions
+    from prom_spark.pipeline.mentions import detect_matching_mentions, detect_mentions
 
     tr = synth_transcripts(spark, n_convs=40, turns_per_conv=5, n_entities=48)
     d = entity_dictionary(spark, 48).cache()
@@ -372,9 +390,17 @@ def test_per_turn_linking_equals_flat_linking(spark):
         (r.conv_id, r.turn_idx, r.start, r.end, r.canonical_id or r.entity_id)
         for r in flat.collect()
     }
+    dict_slim = d.select("alias", "entity_id", "embedding")
+    scored = _score_candidates(
+        m, dict_slim, _fuzzy_scores(m.select("gram").distinct(), dict_slim),
+        use_salting=False,
+    )
     fused = {
         (r.conv_id, r.turn_idx, r.e.ts, r.e.te, r.e.entity_id)
-        for r in link_mentions_per_turn(m, d, entity_map=emap)
+        for r in _per_turn_select(
+            scored, entity_map=emap,
+            preds=detect_matching_mentions(tr, [], predicates=PREDICATES),
+        )
         .select("conv_id", "turn_idx", F.explode("ents").alias("e"))
         .collect()
     }
@@ -654,7 +680,9 @@ def test_entity_map_driver_pass_job_count(spark):
     assert 0 < len(jobs) <= 2, jobs
 
 
-def test_resume_recomputes_stage_after_failed_rewrite(spark, kg, tmp_path):
+def test_resume_recomputes_stage_after_failed_rewrite(
+    spark, kg, tmp_path, stage_writes
+):
     """A stage rewrite whose job fails partway (the overwrite has already
     deleted the old data) must not leave the old checkpoint marker
     behind: resume recomputes the stage and the triples come out
@@ -679,7 +707,108 @@ def test_resume_recomputes_stage_after_failed_rewrite(spark, kg, tmp_path):
         store.write("triples_raw", broken, partition_by=["bucket"])
     assert not store.exists("triples_raw")
 
-    poisoned = tr.withColumn("text", F.lit("POISON"))
-    again = build_kg(spark, poisoned, d, base_f, resume=True)
+    stage_writes.clear()
+    again = build_kg(spark, tr, d, base_f, resume=True)
+    assert stage_writes == ["triples_raw"]
     assert again.store.exists("triples_raw")
     assert {tuple(r) for r in again.triples.collect()} == t1
+
+
+def _triple_set(res):
+    return {
+        tuple(r)
+        for r in res.triples.select(
+            "conv_id", "turn_idx", "subj", "pred", "obj"
+        ).collect()
+    }
+
+
+def test_resume_recomputes_on_changed_transcripts(spark, tmp_path):
+    """Resuming in the same checkpoint dir over DIFFERENT transcripts —
+    in-memory, or files rewritten in place — must give the fresh
+    build's triples: ingest records a source fingerprint, and every
+    stage downstream of a rewritten stage recomputes."""
+    d = entity_dictionary(spark, 24).cache()
+
+    def transcripts(seed):
+        return synth_transcripts(
+            spark, n_convs=16, turns_per_conv=4, n_entities=24, seed=seed
+        )
+
+    a, b = transcripts("1"), transcripts("2")
+    want = _triple_set(build_kg(spark, b, d, str(tmp_path / "fresh"), resume=False))
+    base = str(tmp_path / "kg")
+    assert _triple_set(build_kg(spark, a, d, base, resume=False)) != want
+    assert _triple_set(build_kg(spark, b, d, base, resume=True)) == want
+
+    src, base_f = str(tmp_path / "src"), str(tmp_path / "kg_files")
+    a.write.parquet(src)
+    build_kg(spark, spark.read.parquet(src), d, base_f, resume=False)
+    b.write.mode("overwrite").parquet(src)
+    resumed = build_kg(spark, spark.read.parquet(src), d, base_f, resume=True)
+    assert _triple_set(resumed) == want
+
+
+def test_resume_recomputes_on_changed_dictionary(spark, tmp_path):
+    """Resuming over a different dictionary must give the fresh build's
+    triples, not the old dictionary's entity map and links."""
+    tr = synth_transcripts(spark, n_convs=16, turns_per_conv=4, n_entities=24)
+    d1 = entity_dictionary(spark, 24)
+    d2 = d1.withColumn("entity_id", F.concat(F.lit("X"), "entity_id"))
+    want = _triple_set(build_kg(spark, tr, d2, str(tmp_path / "fresh"), resume=False))
+    base = str(tmp_path / "kg")
+    assert _triple_set(build_kg(spark, tr, d1, base, resume=False)) != want
+    assert _triple_set(build_kg(spark, tr, d2, base, resume=True)) == want
+
+
+def test_checkpoint_stale_when_input_stage_rewritten(spark, tmp_path):
+    """A checkpoint whose input stage was rewritten in this run is stale
+    even though its recorded inputs still match; with nothing rewritten
+    both checkpoints are reused."""
+    from prom_spark.sinks import StageStore
+
+    calls = []
+
+    def make(name):
+        def _compute():
+            calls.append(name)
+            return spark.createDataFrame([(1,)], "a int")
+        return _compute
+
+    def run(**kw):
+        store = StageStore(spark, str(tmp_path))
+        store.get_or_compute("up", make("up"), inputs=["src"], **kw)
+        store.get_or_compute("down", make("down"), inputs=["up"])
+
+    run()
+    assert calls == ["up", "down"]
+    run(resume=False)
+    assert calls == ["up", "down"] * 2
+    run()
+    assert calls == ["up", "down"] * 2
+
+
+def test_source_fingerprint_is_metadata_only(spark, tmp_path):
+    """Fingerprints tell sources apart (data, files, filters), are equal
+    for the same files read twice, and start no Spark job."""
+    from prom_spark.sinks import source_fingerprint
+
+    a = synth_transcripts(spark, n_convs=4, turns_per_conv=2, seed="1")
+    b = synth_transcripts(spark, n_convs=4, turns_per_conv=2, seed="2")
+    src = str(tmp_path / "src")
+    a.write.parquet(src)
+    read1, read2 = spark.read.parquet(src), spark.read.parquet(src)
+    sc = spark.sparkContext
+    group = "test_source_fingerprint_is_metadata_only"
+    sc.setJobGroup(group, "source fingerprints")
+    try:
+        fa, fb = source_fingerprint(a), source_fingerprint(b)
+        f1, f2 = source_fingerprint(read1), source_fingerprint(read2)
+        f_filtered = source_fingerprint(read1.filter("turn_idx > 0"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert fa != fb
+    assert f1 == f2 and f1 not in (fa, f_filtered)
+    b.write.mode("overwrite").parquet(src)
+    assert source_fingerprint(spark.read.parquet(src)) != f1

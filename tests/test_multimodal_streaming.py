@@ -230,8 +230,29 @@ def test_image_decoder_switch_fails_loudly_without_codec(monkeypatch):
         pytest.skip("Pillow available: real path would decode")
     except ImportError:
         pass
-    from prom_spark.multimodal import _decode_pixels_stub
+    from prom_spark.multimodal import _decode_pixels_stub, _image_decoder
 
     monkeypatch.setenv("PROM_SPARK_IMAGE_DECODER", "pillow")
     with pytest.raises(NotImplementedError, match="PROM_SPARK_IMAGE_DECODER"):
-        _decode_pixels_stub(b"\x89PNG")
+        _decode_pixels_stub(b"\x89PNG", _image_decoder())
+
+
+def test_image_decoder_switch_set_on_driver_reaches_the_decode(spark, monkeypatch):
+    """PROM_SPARK_IMAGE_DECODER=pillow set on the driver after the
+    session started must decide what the executors decode with: without
+    Pillow the Spark job fails loudly instead of silently running the
+    stand-in."""
+    import pytest
+
+    try:
+        import PIL  # noqa: F401
+
+        pytest.skip("Pillow available: real path would decode")
+    except ImportError:
+        pass
+    monkeypatch.setenv("PROM_SPARK_IMAGE_DECODER", "pillow")
+    feats = extract_features(synth_assets(spark, 4, "image"))
+    with pytest.raises(
+        Exception, match="NotImplementedError: PROM_SPARK_IMAGE_DECODER"
+    ):
+        feats.collect()

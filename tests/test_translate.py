@@ -79,3 +79,20 @@ def test_real_kernel_switch_fails_loudly_without_runtime():
 
     with pytest.raises(NotImplementedError, match="PROM_SPARK_MT_MODEL"):
         _load_model("Helsinki-NLP/opus-mt-en-de")
+
+
+def test_model_switch_set_on_driver_reaches_the_model_stage(spark, docs, monkeypatch):
+    """PROM_SPARK_MT_MODEL set on the driver after the session started
+    must decide what the executors' model stage runs: without the MT
+    runtime the Spark job fails loudly instead of silently translating
+    with the stand-in."""
+    try:
+        import transformers  # noqa: F401
+
+        pytest.skip("transformers available: real path would load")
+    except ImportError:
+        pass
+    monkeypatch.setenv("PROM_SPARK_MT_MODEL", "Helsinki-NLP/opus-mt-en-de")
+    out = translate_texts(docs, "text", ["doc_id"])
+    with pytest.raises(Exception, match="NotImplementedError: PROM_SPARK_MT_MODEL"):
+        out.collect()
