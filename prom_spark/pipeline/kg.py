@@ -21,6 +21,14 @@ Stages (each a checkpointed table via sinks.StageStore; resumable):
   triples       canonical (subj, pred, obj, conv_id, turn_idx): a
                 metadata-only alias of triples_raw
 
+One linking + extraction plan serves batch and stream: both score
+candidates with ``_score_candidates``, select links inside per-turn
+arrays (``_per_turn_select``) and extract triples from those arrays
+(``extract_triples``). A stream micro-batch (streaming.pipeline) has no
+checkpointed stages: it scores its own mention stream through
+``_scored_mentions``, which flat ``link_mentions`` (the q25 oracle
+chain) shares.
+
 The reference analogue is Prom.run_all (reference src/prom.py:201-213):
 lexical/structural matching -> selection -> link ontology -> merged
 concept clusters; here matching is mention⋈dictionary scoring, the link
@@ -46,13 +54,8 @@ from prom_spark.pipeline.mentions import (
     detect_matching_mentions,
     detect_mentions,
     distinct_grams,
-    with_tokens,
 )
 from prom_spark.sinks import StageStore, source_fingerprint
-
-# default bucket count for local runs; deployments size it via
-# PipelineConfig.n_output_buckets (see config.py for the sizing rule)
-N_BUCKETS = 32
 
 
 def _bucket_layout(
@@ -118,7 +121,6 @@ def _bucket_layout(
 class KgResult:
     triples: DataFrame
     entity_canonical: DataFrame
-    linked_mentions: DataFrame
     store: StageStore
 
 
@@ -311,25 +313,20 @@ def _score_candidates(
     return exact.unionByName(fuzzy)
 
 
-def link_mentions(
+def _scored_mentions(
     mentions: DataFrame,
     dictionary: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
     use_salting: bool | None = None,
     hot_keys=None,
 ) -> DataFrame:
-    """Entity-link scoring + per-span selection, flat output
-    (north_star stage 3) — the stream's micro-batch linker and the q25
-    oracle chain. ``use_salting=None`` picks the join regime from the
-    dictionary size (see ``_score_candidates``).
+    """Scored link candidates (``_score_candidates`` rows) for a raw
+    mention stream — the linking half that flat ``link_mentions`` and
+    each stream micro-batch share. ``use_salting=None`` picks the join
+    regime from the dictionary size (see ``_score_candidates``).
 
     The distinct mention grams are fuzzy-scored first; in the salted
-    regime the stream is then semi-reduced to linkable grams. Selection:
-    best candidate per mention span via single-shuffle aggregation
-    (map-side combine collapses hot spans pre-exchange). Within a span
-    key the gram is fixed, so selection = max rating, ties to the
-    smallest entity_id.
-    """
+    regime the stream is then semi-reduced to linkable grams."""
     dict_slim = dictionary.select("alias", "entity_id", "embedding")
     # dictionaries are entity catalogs: row count is a fine proxy for
     # the regime; a forced broadcast needs no count
@@ -346,11 +343,28 @@ def link_mentions(
         mentions = _semi_reduce(
             mentions, _match_keys(dict_slim, fuzzy_scores), n_dict, cfg, hot_keys
         )
-    candidates = _score_candidates(
+    return _score_candidates(
         mentions, dict_slim, fuzzy_scores, cfg, use_salting, hot_keys
     )
+
+
+def link_mentions(
+    mentions: DataFrame,
+    dictionary: DataFrame,
+    cfg: PipelineConfig = DEFAULT_CONFIG,
+    use_salting: bool | None = None,
+    hot_keys=None,
+) -> DataFrame:
+    """Entity-link scoring + per-span selection, flat output
+    (north_star stage 3) — the q25 oracle chain.
+
+    Selection: best candidate per mention span via single-shuffle
+    aggregation (map-side combine collapses hot spans pre-exchange).
+    Within a span key the gram is fixed, so selection = max rating,
+    ties to the smallest entity_id.
+    """
     return best_candidate_per_left_agg(
-        candidates,
+        _scored_mentions(mentions, dictionary, cfg, use_salting, hot_keys),
         key_cols=["conv_id", "turn_idx", "start", "end"],
         payload_cols=["entity_id", "gram"],
         threshold=cfg.link_threshold,
@@ -364,16 +378,6 @@ _CAND_STRUCT = "struct<ts:int,te:int,nr:double,entity_id:string>"
 _PRED_STRUCT = "struct<p:int,tok:string>"
 
 
-def _canonical_ids(links: DataFrame, entity_map: DataFrame) -> DataFrame:
-    """``links`` with each entity_id replaced by its canonical id
-    (broadcast map; ids the map lacks keep their own)."""
-    return (
-        links.join(F.broadcast(entity_map), on="entity_id", how="left")
-        .withColumn("entity_id", F.coalesce("canonical_id", "entity_id"))
-        .drop("canonical_id")
-    )
-
-
 def _per_turn_select(
     cand: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
@@ -383,7 +387,8 @@ def _per_turn_select(
     layout: dict | None = None,
 ) -> DataFrame:
     """Scored candidate stream (``_score_candidates``) -> (conv_id,
-    turn_idx, ents) in one shuffle — ``build_kg``'s per-turn linking.
+    turn_idx, ents, preds) in one shuffle — the per-turn linking of
+    ``build_kg`` and of every stream micro-batch.
 
     Canonical ids are applied on the candidate stream (broadcast join)
     before grouping; per-span selection happens INSIDE the per-turn
@@ -406,16 +411,21 @@ def _per_turn_select(
     and the final bucketed write.
 
     ``preds``: the predicate-occurrence stream (conv_id, turn_idx, gram,
-    start — the candidate scan's kind='p' rows). Predicate positions
-    ride the SAME grouping shuffle as extra null-padded rows and the
-    output gains a ``preds`` array column — so triple extraction
-    downstream needs no join back to the transcript text at all. Turns
-    whose candidates all fall below the rating threshold are dropped
-    even when they carry predicates (nothing to extract from a turn with
-    no linked entities)."""
+    start — the candidate scan's kind='p' rows, or
+    ``detect_matching_mentions(..., [], predicates=PREDICATES)``).
+    Predicate positions ride the SAME grouping shuffle as extra
+    null-padded rows and the output gains a ``preds`` array column — so
+    triple extraction downstream needs no join back to the transcript
+    text at all. Turns whose candidates all fall below the rating
+    threshold are dropped even when they carry predicates (nothing to
+    extract from a turn with no linked entities)."""
     cand = cand.filter(F.col("rating") > cfg.link_threshold)
     if entity_map is not None:
-        cand = _canonical_ids(cand, entity_map)
+        cand = (
+            cand.join(F.broadcast(entity_map), on="entity_id", how="left")
+            .withColumn("entity_id", F.coalesce("canonical_id", "entity_id"))
+            .drop("canonical_id")
+        )
     cand_struct = F.struct(
         F.col("start").alias("ts"),
         F.col("end").alias("te"),
@@ -463,101 +473,40 @@ def _per_turn_select(
     return per_turn.select(*keys, "conv_id", "turn_idx", ents_expr, "preds")
 
 
-def extract_triples(
-    transcripts: DataFrame | None,
-    linked: DataFrame,
-    entity_map: DataFrame | None = None,
-) -> DataFrame:
-    """Predicate extraction (north_star stage 4).
+def extract_triples(linked: DataFrame) -> DataFrame:
+    """Predicate extraction (north_star stage 4) over per-turn ``ents``
+    and ``preds`` arrays (``_per_turn_select`` output — ``build_kg``'s
+    triple stage and every stream micro-batch).
 
-    Fast path: a ``linked`` frame that already carries BOTH ``ents`` and
-    ``preds`` per-turn arrays (``_per_turn_select(preds=...)`` — the
-    ``build_kg`` shape) needs NO transcript re-scan and NO join at all:
-    predicate positions were detected in the same pass as the mentions
-    and grouped in the same shuffle. ``transcripts`` may be None. If the
-    frame also carries ``bucket``/``_sub`` layout columns (from
-    ``_bucket_layout(keep_sub=True)``), the cross-turn ``follows``
-    window partitions on them too, so the layout exchange upstream
-    satisfies the window's distribution and this whole stage plans as a
-    single exchange: repartition -> sort -> array ops -> explode ->
-    write. The slow path below (flat linked + transcripts) remains for
-    streaming micro-batches and the q25 oracle chain.
-
-    Plan shape: ONE shuffle groups linked mentions into a per-turn entity
-    array; predicate token positions come straight from the turn text
-    (narrow scan — the tokenizer is shared with mention detection, so
-    positions line up by construction). Everything per-turn — the
-    `<subj> <pred> [the] <obj>` adjacency pattern, co-occurrence pairs,
-    the turn-subject pick — is then higher-order array expressions inside
-    codegen; turn arrays are bounded by turn length, so per-group work is
-    O(turn tokens), never O(corpus).
-
-    The previous formulation (three position-equi-joins + two windows +
-    two global distincts over the full mention table) spent ~6 shuffles
-    on what one groupBy expresses; at 10^12 turns those exchanges are the
-    whole cost.
+    Predicate positions were detected in the same scan as the mentions
+    and grouped in the same shuffle, so there is NO transcript re-scan
+    and NO join. Everything per-turn — the `<subj> <pred> [the] <obj>`
+    adjacency pattern, co-occurrence pairs, the turn-subject pick — is
+    higher-order array expressions inside codegen; turn arrays are
+    bounded by turn length, so per-group work is O(turn tokens), never
+    O(corpus).
 
     Cross-turn `follows` edges use a (conv_id)-partitioned window over
     the per-turn rows, ordered by turn_idx — the stable-ordering
-    invariant O4, at one row per turn instead of one per mention.
+    invariant O4, at one row per turn instead of one per mention. If
+    the frame carries ``bucket``/``_sub`` layout columns (from
+    ``_bucket_layout(keep_sub=True)``), the window partitions on them
+    too, so the layout exchange upstream satisfies the window's
+    distribution and the whole stage plans as a single exchange:
+    repartition -> sort -> array ops -> explode -> write.
 
-    When ``entity_map`` is given, entity ids are canonicalized BEFORE the
-    per-turn grouping (one broadcast join on the mention stream). Because
-    every emitted triple carries (conv_id, turn_idx), duplicates can only
-    arise within a single turn — so the per-turn ``array_distinct`` after
-    canonical mapping is a complete dedup, and the final stage needs no
+    Entity ids arrive canonical (``_per_turn_select(entity_map=...)``).
+    Because every emitted triple carries (conv_id, turn_idx), duplicates
+    can only arise within a single turn — so the per-turn
+    ``array_distinct`` is a complete dedup, and the stage needs no
     global ``distinct`` (a full corpus-wide exchange at 10^12 scale).
     """
-    if transcripts is None and "preds" not in linked.columns:
-        raise ValueError(
-            "extract_triples: `linked` carries no per-turn `preds` column "
-            "and no transcripts frame was given — predicate positions "
-            "must come from one of them: pass per-turn ents + preds "
-            "arrays (_per_turn_select(preds=...)), or flat link_mentions "
-            "output with transcripts=..."
-        )
-    carry = []
-    if "ents" in linked.columns and "preds" in linked.columns:
-        # fully fused input from _per_turn_select(preds=...): per-turn
-        # entity AND predicate arrays, canonical, span-selected — no
-        # transcript scan, no join
-        carry = [c for c in ("bucket", "_sub") if c in linked.columns]
-        per_turn = linked.select("conv_id", "turn_idx", *carry, "ents", "preds")
-    else:
-        if entity_map is not None:
-            linked = _canonical_ids(linked, entity_map)
-        # struct fields renamed (ts, te): `end` is reserved under the ANSI
-        # parser and would break the lambda field accesses below
-        ents = linked.groupBy("conv_id", "turn_idx").agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("start").alias("ts"),
-                        F.col("end").alias("te"),
-                        "entity_id",
-                    )
-                )
-            ).alias("ents")
-        )
-        preds = (
-            with_tokens(transcripts)
-            .select(
-                "conv_id",
-                "turn_idx",
-                F.filter(
-                    F.transform(
-                        "_toks",
-                        lambda x, i: F.struct(x.alias("tok"), i.cast("int").alias("p")),
-                    ),
-                    lambda s: s["tok"].isin(*PREDICATES),
-                ).alias("preds"),
-            )
-        )
-        per_turn = ents.join(preds, on=["conv_id", "turn_idx"], how="left")
+    carry = [c for c in ("bucket", "_sub") if c in linked.columns]
+    per_turn = linked.select("conv_id", "turn_idx", *carry, "ents", "preds")
 
     # within-turn: subj ends at p-1, obj starts at p+1 (or p+2 skipping a
-    # determiner). array_distinct replaces the old global distinct — the
-    # dedup granularity was per-turn anyway.
+    # determiner). array_distinct is the whole dedup: duplicates can only
+    # arise within a turn.
     within_arr = F.expr(
         """
         array_distinct(flatten(transform(preds, pr ->
@@ -799,14 +748,14 @@ def build_kg(
     store = StageStore(spark, base_dir)
     source = source_fingerprint(transcripts)
     dict_source = source_fingerprint(dictionary)
-    n_buckets = getattr(cfg, "n_output_buckets", N_BUCKETS)
+    n_buckets = cfg.n_output_buckets
 
     # NOT pre-tokenized: storing a `_toks` array column at ingest was
     # measured (1.2M turns, 4c+16c) — the +50% stage-table write cost
     # exceeds what the three downstream scans save, because their wall
     # is the struct explode + aggregation, not the tokenizer regex.
-    # detect_mentions/extract_triples still reuse a `_toks` column when
-    # a caller provides one.
+    # The mention scanners still reuse a `_toks` column when a caller
+    # provides one.
     ingest = store.get_or_compute(
         "ingest",
         # n_rows gates the write-balancing sub-split on data size: the
@@ -942,42 +891,35 @@ def build_kg(
     # grouping, the cross-turn `follows` window AND the final bucketed
     # write (layout= threads bucket[,_sub] into the grouping and window
     # keys — subset rule, see _per_turn_select). The per-turn linked
-    # table is never materialized: checkpointing it was a full
-    # corpus-sized write + re-read + second exchange purely to resume a
+    # table is never materialized: checkpointing it would cost a full
+    # corpus-sized write + re-read + second exchange to resume a
     # sub-stage (scoring + grouping) that is cheap next to the candidate
-    # detection it resumes FROM — at 10^12 turns that round-trip is the
-    # largest avoidable cost left in the plan. `linked_mentions` on the
-    # result is the same sub-plan, lazily re-derived from the candidates
-    # checkpoint when a consumer actually evaluates it.
-    def _linked_plan(layout: dict | None = None) -> DataFrame:
-        return _per_turn_select(
-            _score_candidates(
-                candidates.filter(F.col("kind") == "m").drop("kind"),
-                dict_slim, fuzzy_scores, cfg,
-                use_salting=use_salting, hot_keys=hot_keys,
-                # the checkpoint row count is free and refines the fuzzy
-                # re-join: broadcast iff the score table measures under
-                # the budget, salted shuffle otherwise
-                fuzzy_rows=store.metrics("fuzzy_scores")["rows"],
-            ),
-            cfg,
-            entity_map,
-            preds=candidates.filter(F.col("kind") == "p"),
-            layout=layout,
-        )
-
+    # detection it resumes FROM.
     triples_raw = store.get_or_compute(
         "triples_raw",
-        # the ingest checkpoint's recorded row count (= turns, the row
-        # grain entering the layout shuffle) gates the write-balancing
-        # sub-split for free (no count job)
         lambda: extract_triples(
-            None,
-            _linked_plan(layout=dict(
-                n_buckets=n_buckets,
-                n_rows=store.metrics("ingest")["rows"],
-                min_bucket_rows=cfg.sub_split_min_bucket_rows,
-            )),
+            _per_turn_select(
+                _score_candidates(
+                    candidates.filter(F.col("kind") == "m").drop("kind"),
+                    dict_slim, fuzzy_scores, cfg,
+                    use_salting=use_salting, hot_keys=hot_keys,
+                    # the checkpoint row count is free and refines the
+                    # fuzzy re-join: broadcast iff the score table
+                    # measures under the budget, salted shuffle otherwise
+                    fuzzy_rows=store.metrics("fuzzy_scores")["rows"],
+                ),
+                cfg,
+                entity_map,
+                preds=candidates.filter(F.col("kind") == "p"),
+                # the ingest checkpoint's recorded row count (= turns,
+                # the row grain entering the layout shuffle) gates the
+                # write-balancing sub-split for free (no count job)
+                layout=dict(
+                    n_buckets=n_buckets,
+                    n_rows=store.metrics("ingest")["rows"],
+                    min_bucket_rows=cfg.sub_split_min_bucket_rows,
+                ),
+            )
         ).drop("_sub"),
         resume=resume,
         inputs=["candidates", "fuzzy_scores", dict_source, "entity_map"],
@@ -985,25 +927,11 @@ def build_kg(
         sort_within_partitions=["conv_id", "turn_idx"],
     )
 
-    # the published triple table IS triples_raw's layout: the final stage
-    # is a metadata-only alias. The previous formulation re-shuffled and
-    # re-wrote the pipeline's largest output a second time purely to
-    # apply a layout the extraction shuffle can produce directly — at
-    # 10^12 turns that second exchange+write of the full triple table is
-    # the single biggest avoidable cost in the plan.
+    # the published triple table IS triples_raw's layout (the extraction
+    # shuffle already produces it): the final stage is a metadata-only
+    # alias
     triples = store.get_or_alias(
         "triples", "triples_raw", resume=resume,
         inputs=["triples_raw", "entity_map"],
     )
-    # flat per-mention view of the per-turn linking (fully lazy: the
-    # sub-plan re-derives from the candidates checkpoint on evaluation)
-    linked_flat = _linked_plan().select(
-        "conv_id", "turn_idx", F.explode("ents").alias("e")
-    ).select(
-        "conv_id",
-        "turn_idx",
-        F.col("e.ts").alias("start"),
-        F.col("e.te").alias("end"),
-        F.col("e.entity_id").alias("entity_id"),
-    )
-    return KgResult(triples, entity_map, linked_flat, store)
+    return KgResult(triples, entity_map, store)

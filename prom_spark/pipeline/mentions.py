@@ -218,10 +218,10 @@ def detect_matching_mentions(
 
     ``predicates``: when given, predicate-token occurrences ride the
     SAME scan as extra rows and the output gains a ``kind`` column
-    ('m' mention / 'p' predicate). Predicate probing matches
-    ``extract_triples``'s direct ``isin(*PREDICATES)`` over the token
-    array — it does NOT apply the stop-gram filter, and a token that is
-    both an alias and a predicate emits both rows. Fusing the predicate
+    ('m' mention / 'p' predicate). Predicate probing is a direct
+    ``isin(*predicates)`` over the token array — it does NOT apply the
+    stop-gram filter, and a token that is both an alias and a predicate
+    emits both rows. Fusing the predicate
     scan here is what lets the triple-extraction stage run with no
     second pass over the corpus text (see kg.extract_triples).
     """

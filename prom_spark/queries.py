@@ -2685,12 +2685,12 @@ _POSTINGS_K = 20
 
 def q51_inverted_index(spark, sf_dir):
     """Inverted-index construction: per term, document frequency and
-    the first 20 postings (doc_ids ascending) — the IR-side primitive
-    for corpus search/dedup tooling. The posting-list truncation runs
-    through operators/topk.salted_topk, so a stopword term that
-    appears in most of a 10^12-doc corpus cannot serialize the stage
-    into one task; df comes from the full distinct stream (map-side
-    combinable count)."""
+    the first 20 postings (doc_ids ascending, comma-joined) — the
+    IR-side primitive for corpus search/dedup tooling. The posting-list
+    truncation runs through operators/topk.salted_topk, so a stopword
+    term that appears in most of a 10^12-doc corpus cannot serialize
+    the stage into one task; df comes from the full distinct stream
+    (map-side combinable count)."""
     from prom_spark.operators.topk import salted_topk
 
     d = _t(spark, sf_dir, "documents")
@@ -2700,8 +2700,12 @@ def q51_inverted_index(spark, sf_dir):
     ).distinct()
     dfreq = posting.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     top = salted_topk(posting, ["term"], "doc_id", k=_POSTINGS_K)
+    # a scalar string, not an array: results are compared as sorted
+    # frames, and list cells are unhashable there
     postings = top.groupBy("term").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("postings")
+        F.array_join(
+            F.sort_array(F.collect_list("doc_id")).cast("array<string>"), ","
+        ).alias("postings")
     )
     return dfreq.join(postings, on="term").select("term", "df", "postings")
 
@@ -2717,7 +2721,7 @@ ranked AS (
   FROM posting)
 SELECT term, df, postings
 FROM (SELECT term, count(*) AS df FROM posting GROUP BY 1) d
-JOIN (SELECT term, list_sort(list(doc_id)) AS postings
+JOIN (SELECT term, array_to_string(list_sort(list(doc_id)), ',') AS postings
       FROM ranked WHERE rn <= {_POSTINGS_K} GROUP BY 1) p USING (term)
 """
 

@@ -1,11 +1,14 @@
 """Streaming KG construction (Structured Streaming).
 
-Transcripts arrive as files (Kafka on a real deployment — same API);
-the stateless stages (mention detection, dictionary linking) run
+Transcripts arrive as files (Kafka on a real deployment — same API).
+The stateless stages (mention detection, exact dictionary linking) run
 directly on the stream; windowed/watermarked aggregation handles late
-turns; triple emission + canonical mapping run per micro-batch via
-``foreachBatch`` (the cross-turn window and CC need batch semantics —
-exactly the stages the reference could never stream at all).
+turns. Triple construction runs per micro-batch via ``foreachBatch``
+(the cross-turn window and canonicalization need batch semantics —
+exactly the stages the reference could never stream at all), and each
+micro-batch runs batch's own linking + extraction plan
+(``micro_batch_triples``): scored candidates, per-turn link selection,
+fused triple extraction.
 """
 
 from __future__ import annotations
@@ -13,6 +16,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from prom_spark.config import DEFAULT_CONFIG
+from prom_spark.datagen import PREDICATES
+from prom_spark.pipeline.kg import (
+    _per_turn_select,
+    _scored_mentions,
+    canonicalize_entities,
+    extract_triples,
+)
+from prom_spark.pipeline.mentions import detect_matching_mentions, detect_mentions
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -39,8 +52,6 @@ def streaming_entity_mentions(stream: DataFrame, dictionary: DataFrame) -> DataF
     stream. ``ts`` rides through the explode via ``keep_cols`` — the
     whole stage is narrow (scan -> explode -> broadcast join), no
     stream-stream join, no state store."""
-    from prom_spark.pipeline.mentions import detect_mentions
-
     mentions = detect_mentions(
         stream.select("conv_id", "turn_idx", "text", "ts"), keep_cols=("ts",)
     )
@@ -117,6 +128,36 @@ def streaming_first_seen_entities(
     )
 
 
+def micro_batch_triples(
+    batch: DataFrame,
+    dictionary: DataFrame,
+    entity_map: DataFrame,
+    use_salting: bool = False,
+    hot_keys=None,
+) -> DataFrame:
+    """Canonical triples of one micro-batch through ``build_kg``'s plan:
+    ``_scored_mentions`` over the batch's mention stream, per-turn link
+    selection with the predicate occurrences riding the same shuffle
+    (``_per_turn_select``), then ``extract_triples`` over the per-turn
+    arrays.
+
+    Unlike ``build_kg``, bigrams stay unblocked (``detect_mentions``
+    without first tokens): no per-batch dictionary collect, and a fuzzy
+    link may start at a token that starts no multiword alias — so a
+    stream can emit a few triples the batch run blocks (10,193 vs
+    10,173 on perfbench's seed-42 ``kg_stream`` input)."""
+    scored = _scored_mentions(
+        detect_mentions(batch), dictionary, DEFAULT_CONFIG,
+        use_salting=use_salting, hot_keys=hot_keys,
+    )
+    return extract_triples(
+        _per_turn_select(
+            scored, DEFAULT_CONFIG, entity_map,
+            preds=detect_matching_mentions(batch, [], predicates=PREDICATES),
+        )
+    )
+
+
 def run_streaming_kg(
     spark: SparkSession,
     input_path: str,
@@ -127,15 +168,17 @@ def run_streaming_kg(
     use_salting: bool = False,
     hot_keys=None,
 ) -> None:
-    """Micro-batch KG construction: each batch runs the batch linking +
-    triple extraction (foreachBatch), appending to the triple table.
+    """Micro-batch KG construction: each batch runs batch's linking +
+    triple extraction plan (``micro_batch_triples`` in foreachBatch),
+    appending to the triple table.
     availableNow trigger: drains all pending files then stops — the
     deterministic test/batch-backfill mode.
 
     Canonicalization state is CROSS-batch: the dictionary-derived
     ``entity_map`` (computed once, broadcast into every micro-batch)
-    maps entity ids to canonical cluster ids inside ``extract_triples``,
-    so streamed triples are canonical exactly like batch triples.
+    maps candidate entity ids to canonical cluster ids before per-turn
+    selection, so streamed triples are canonical exactly like batch
+    triples.
 
     ``use_salting`` / ``hot_keys`` reuse the batch join design for
     beyond-broadcast dictionaries: micro-batches are usually small
@@ -145,14 +188,6 @@ def run_streaming_kg(
     a priori (per-batch hot-key detection would add a count pass to
     every trigger).
     """
-    from prom_spark.config import DEFAULT_CONFIG
-    from prom_spark.pipeline.kg import (
-        canonicalize_entities,
-        extract_triples,
-        link_mentions,
-    )
-    from prom_spark.pipeline.mentions import detect_mentions
-
     if entity_map is None:
         entity_map = canonicalize_entities(dictionary)
     entity_map = entity_map.localCheckpoint(eager=True)
@@ -160,12 +195,10 @@ def run_streaming_kg(
     stream = stream_transcripts(spark, input_path)
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        mentions = detect_mentions(batch)
-        linked = link_mentions(
-            mentions, dictionary, DEFAULT_CONFIG,
+        triples = micro_batch_triples(
+            batch, dictionary, entity_map,
             use_salting=use_salting, hot_keys=hot_keys,
         )
-        triples = extract_triples(batch, linked, entity_map=entity_map)
         triples.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
             output_dir
         )

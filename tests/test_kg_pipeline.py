@@ -329,17 +329,18 @@ def test_detect_matching_mentions_predicates(spark):
 
 
 def test_fused_triples_equal_unfused_extraction(spark, kg):
-    """build_kg's single-exchange triples stage (preds carried through
-    the candidate stream, window keyed on the layout columns) must emit
-    exactly the triples of the flat path the stream runs: flat linking
-    + canonical mapping + transcript re-scan + (conv_id, turn_idx)
-    join, over the same first-token-blocked mentions."""
+    """build_kg's single-exchange triples stage (candidate and fuzzy
+    checkpoints, inline-keyset candidate scan, window keyed on the
+    layout columns) must emit exactly the triples of the stream's
+    micro-batch plan — ``_scored_mentions`` -> ``_per_turn_select`` ->
+    ``extract_triples`` — over the same first-token-blocked mentions."""
     from prom_spark.pipeline.kg import (
+        _per_turn_select,
+        _scored_mentions,
         canonicalize_entities,
         extract_triples,
-        link_mentions,
     )
-    from prom_spark.pipeline.mentions import detect_mentions
+    from prom_spark.pipeline.mentions import detect_matching_mentions, detect_mentions
 
     tr, d, res, _ = kg
     first_tokens = [
@@ -351,11 +352,18 @@ def test_fused_triples_equal_unfused_extraction(spark, kg):
     ]
     m = detect_mentions(tr, bigram_first_tokens=first_tokens)
     emap = canonicalize_entities(d)
+    stream_plan = extract_triples(
+        _per_turn_select(
+            _scored_mentions(m, d),
+            entity_map=emap,
+            preds=detect_matching_mentions(tr, [], predicates=PREDICATES),
+        )
+    )
     want = {
         tuple(r)
-        for r in extract_triples(tr, link_mentions(m, d), entity_map=emap)
-        .select("conv_id", "turn_idx", "subj", "pred", "obj")
-        .collect()
+        for r in stream_plan.select(
+            "conv_id", "turn_idx", "subj", "pred", "obj"
+        ).collect()
     }
     got = {
         tuple(r)
@@ -566,19 +574,6 @@ def test_fuzzy_rejoin_salted_path(spark):
         ).triples.select(*tcols).collect()
     }
     assert forced == base and len(base) > 0
-
-
-def test_extract_triples_requires_preds_or_transcripts(spark):
-    """A linked frame without per-turn preds and no transcripts must fail
-    loudly (old-format checkpoint resume), not AttributeError mid-plan."""
-    from prom_spark.pipeline.kg import extract_triples
-
-    linked = spark.createDataFrame(
-        [], "conv_id string, turn_idx int, "
-        "ents array<struct<ts:int,te:int,entity_id:string>>",
-    )
-    with pytest.raises(ValueError, match="preds"):
-        extract_triples(None, linked)
 
 
 def test_checkpoint_staleness_invalidation(spark, tmp_path):

@@ -67,17 +67,51 @@ def test_q36_q37_fixture_discriminates(spark):
         assert payloads[aid].startswith(joined) and len(joined) > 0
 
 
+def _flat_reference_triples(transcripts, links, entity_map=None):
+    """Triples from flat ``link_mentions`` rows, grouped per turn here:
+    canonical ids mapped AFTER span selection, predicate positions from
+    a direct token scan of the turn text — an independent route to the
+    per-turn arrays ``extract_triples`` reads."""
+    from prom_spark.datagen import PREDICATES
+    from prom_spark.pipeline.kg import extract_triples
+    from prom_spark.pipeline.mentions import tokens
+
+    if entity_map is not None:
+        links = links.join(F.broadcast(entity_map), on="entity_id", how="left")
+        links = links.withColumn(
+            "entity_id", F.coalesce("canonical_id", "entity_id")
+        )
+    ents = links.groupBy("conv_id", "turn_idx").agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(
+                    F.col("start").alias("ts"), F.col("end").alias("te"), "entity_id"
+                )
+            )
+        ).alias("ents")
+    )
+    preds = transcripts.select(
+        "conv_id",
+        "turn_idx",
+        F.filter(
+            F.transform(
+                tokens(F.col("text")),
+                lambda x, i: F.struct(i.cast("int").alias("p"), x.alias("tok")),
+            ),
+            lambda s: s["tok"].isin(*PREDICATES),
+        ).alias("preds"),
+    )
+    return extract_triples(ents.join(preds, on=["conv_id", "turn_idx"]))
+
+
 def test_streaming_matches_batch(spark, tmp_path):
     """availableNow streaming run must produce the same CANONICAL
-    within-turn triples as the batch pipeline on the same input (the
-    stream threads the dictionary-derived entity_map into every
-    micro-batch)."""
+    triples as an independent batch reference on the same input: flat
+    ``link_mentions`` selection (the q25-oracle-checked path) plus the
+    canonical map, grouped per turn in the test (the stream threads the
+    dictionary-derived entity_map into every micro-batch)."""
     from prom_spark.datagen import entity_dictionary, synth_transcripts
-    from prom_spark.pipeline.kg import (
-        canonicalize_entities,
-        extract_triples,
-        link_mentions,
-    )
+    from prom_spark.pipeline.kg import canonicalize_entities, link_mentions
     from prom_spark.pipeline.mentions import detect_mentions
     from prom_spark.streaming.pipeline import run_streaming_kg
 
@@ -96,11 +130,10 @@ def test_streaming_matches_batch(spark, tmp_path):
 
     batch_tr = spark.read.parquet(in_dir)
     entity_map = canonicalize_entities(d).cache()
-    mentions = detect_mentions(batch_tr)
-    linked = link_mentions(mentions, d, use_salting=False)
+    linked = link_mentions(detect_mentions(batch_tr), d, use_salting=False)
     want = {
         tuple(r)
-        for r in extract_triples(batch_tr, linked, entity_map=entity_map)
+        for r in _flat_reference_triples(batch_tr, linked, entity_map)
         .select("conv_id", "turn_idx", "subj", "pred", "obj")
         .collect()
     }
@@ -109,7 +142,7 @@ def test_streaming_matches_batch(spark, tmp_path):
     # duplicate entities (every 8th), so raw ids differ from canonical
     raw = {
         tuple(r)
-        for r in extract_triples(batch_tr, linked)
+        for r in _flat_reference_triples(batch_tr, linked)
         .select("conv_id", "turn_idx", "subj", "pred", "obj")
         .collect()
     }

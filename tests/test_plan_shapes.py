@@ -54,7 +54,6 @@ def test_fused_triples_plan_single_exchange(spark, linked_shape):
 
     for n_rows, min_rows in ((None, None), (10_000_000, 1)):
         fused = extract_triples(
-            None,
             _bucket_layout(
                 linked_shape, 32, keep_sub=True,
                 n_rows=n_rows, min_bucket_rows=min_rows,
@@ -122,12 +121,35 @@ def test_build_kg_triple_stage_single_shuffle(spark):
             preds=candidates.filter(F.col("kind") == "p"),
             layout=dict(n_buckets=32, n_rows=n_rows, min_bucket_rows=min_rows),
         )
-        fused = extract_triples(None, lp).drop("_sub")
+        fused = extract_triples(lp).drop("_sub")
         tree = _op_tree(_formatted_plan(spark, fused))
         n_shuffles = tree.count("Exchange") - tree.count("BroadcastExchange")
         assert n_shuffles == 1, tree
         assert "SortMergeJoin" not in tree, tree
         assert "Window" in tree, tree
+
+
+def test_stream_micro_batch_plan(spark):
+    """One stream micro-batch runs batch's per-turn plan: the fuzzy
+    distinct, the per-turn grouping (links and predicates in one
+    shuffle) and the `follows` window. No flat span selection, no
+    per-turn regrouping of selected links and no join of them back to
+    a predicate re-scan of the turn text."""
+    from prom_spark.streaming.pipeline import micro_batch_triples
+
+    batch = spark.createDataFrame(
+        [], "conv_id string, turn_idx int, text string"
+    )
+    dictionary = spark.createDataFrame(
+        [], "alias string, entity_id string, embedding array<double>"
+    )
+    emap = spark.createDataFrame([], "entity_id string, canonical_id string")
+    tree = _op_tree(_formatted_plan(
+        spark, micro_batch_triples(batch, dictionary, emap)
+    ))
+    n_shuffles = tree.count("Exchange") - tree.count("BroadcastExchange")
+    assert n_shuffles <= 4, tree
+    assert tree.count("SortMergeJoin") <= 1, tree
 
 
 def test_stratified_sample_stream_never_shuffled(spark):

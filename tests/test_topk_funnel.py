@@ -66,3 +66,33 @@ def test_funnel_ordering_semantics(spark, tmp_path):
     assert out[1].stage == 3
     assert out[2].stage == 1 and out[2].click_us is None
     assert out[3].stage == 2 and out[3].purchase_us is None
+
+
+def test_q51_sorted_frames_match_oracle(spark, tmp_path):
+    """Query results are compared as pandas frames sorted over ALL
+    columns, so q51 must project only sortable scalars (a list-valued
+    ``postings`` column raises ``TypeError: unhashable type``), and the
+    Spark and DuckDB frames must then be equal. 'common' appears in 30
+    documents: its postings are truncated to 20 and ordered by numeric
+    doc_id (9 before 10)."""
+    import duckdb
+    import pandas as pd
+
+    import prom_spark.queries as Q
+
+    docs = [(i, f"Common term{i % 3}  word{i % 7} common") for i in range(1, 31)]
+    path = str(tmp_path / "documents.parquet")
+    spark.createDataFrame(docs, "doc_id long, text string").write.parquet(path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}/*.parquet'")
+
+    def by_all_columns(df):
+        df = df[sorted(df.columns)]
+        return df.sort_values(list(df.columns)).reset_index(drop=True)
+
+    got = by_all_columns(Q.q51_inverted_index(spark, str(tmp_path)).toPandas())
+    want = by_all_columns(con.execute(Q._Q51_SQL).df())
+    assert got.loc[got.term == "common", "postings"].item() == ",".join(
+        str(i) for i in range(1, 21)
+    )
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)

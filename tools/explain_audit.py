@@ -120,7 +120,7 @@ def main() -> None:
         "ents array<struct<ts:int,te:int,entity_id:string>>, "
         "preds array<struct<p:int,tok:string>>",
     )
-    fused = extract_triples(None, _bucket_layout(linked_shape, 32, keep_sub=True))
+    fused = extract_triples(_bucket_layout(linked_shape, 32, keep_sub=True))
     check(
         "fused_triples_single_exchange",
         fused,

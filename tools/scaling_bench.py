@@ -727,8 +727,9 @@ end-to-end number rather than inferring it from host correlation:
 |---|---|---|---|
 {stage_rows}
 
-`entity_map` is a tiny fixed-cost iterative CC over the dictionary
-(independent of corpus size) — its efficiency is expected to be poor and
+`entity_map` is a tiny fixed-cost dictionary pass (one driver pass
+within the broadcast budget, connected components beyond it;
+independent of corpus size) — its efficiency is expected to be poor and
 its absolute seconds negligible, as is `fuzzy_scores` (bounded by
 vocabulary, not corpus); the corpus-proportional stages (ingest,
 grams, candidates, triples_raw) are the meaningful rows. Two former
@@ -761,8 +762,8 @@ per node). {stage_narrative}
 Per-stage CPU accounting shows full core utilization at both levels
 with per-task CPU-seconds inflating at the higher level — stall cycles
 from contended memory, not idle cores, not GC, not algorithmic
-serialization (no driver-side data path exists; every stage is
-shuffle-partitioned).
+serialization (no corpus row reaches the driver; every corpus-sized
+stage is shuffle-partitioned).
 {ceiling_section}
 Round-over-round, attribution drove the number:
 round 1 measured 0.404 (2->8 cores); the per-stage table exposed a
@@ -784,16 +785,18 @@ checkpoint round-trip from the measured wall at both levels.
 
 A cluster of N→4N EXECUTORS — the regime the north_rule targets — adds a
 cache/memory subsystem with every node, so this single-box ceiling does
-not transfer; what does transfer is plan structure: no collect on the
-data path, single-shuffle stages, broadcast/salted skew handling,
+not transfer; what does transfer is plan structure: no corpus-sized
+collect, single-shuffle stages, broadcast/salted skew handling,
 per-partition writes — evidenced in docs/PLANS.md and docs/COVERAGE.md.
 Engine efficiency at the host's random-access ceiling is the strongest
 scaling statement this sandbox can physically express.
 
 ## Why this holds at cluster scale
 
-Every pipeline stage is shuffle-partitioned (no driver-side loops and no
-collect on the data path); the mention⋈dictionary join broadcasts (or
+Every corpus-sized stage is shuffle-partitioned (no driver-side loops
+over corpus rows; the only collects are dictionary-bounded: multiword
+first tokens, the inline match keyset and, within the broadcast budget,
+the entity map); the mention⋈dictionary join broadcasts (or
 salts, beyond broadcast size) the dictionary side so Zipf-hot grams
 never pile into single reducers; selection and triple extraction are
 single-shuffle partial aggregations; stage writes are per-partition
